@@ -89,12 +89,6 @@ def table(
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {n: table(spark, sf_dir, n) for n in names}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all tables as temp views for spark.sql() queries."""
     for n in TABLES:

@@ -58,12 +58,6 @@ def rule_positive_number(col: str, kind: str = "float") -> AuditRule:
     return AuditRule(col, f"positive {kind}", pred)
 
 
-def rule_non_negative_number(col: str, kind: str = "float") -> AuditRule:
-    casted = F.col(col).try_cast("double" if kind == "float" else "long")
-    pred = F.col(col).isNotNull() & (casted.isNull() | (casted < 0))
-    return AuditRule(col, f"non-negative {kind}", pred)
-
-
 def rule_charset(col: str, regex: str = PHONE_RE, label: str = "phone charset") -> AuditRule:
     return AuditRule(col, label, F.col(col).isNotNull() & ~F.col(col).rlike(regex))
 

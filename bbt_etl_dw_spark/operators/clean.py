@@ -24,7 +24,6 @@ Fix semantics (reference ``data_cleaning.py``):
 
 from __future__ import annotations
 
-import re
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 
@@ -207,12 +206,6 @@ class CleaningPlan:
         if exprs:
             df = df.withColumns(exprs)
         return df
-
-
-def strip_duplicate_suffix(name: str) -> str:
-    """OrderID0 -> OrderID (reference data_cleaning.py:130-134)."""
-    m = re.match(r"^([A-Za-z]+?)\d+$", name)
-    return m.group(1) if m else name
 
 
 def winsorize(

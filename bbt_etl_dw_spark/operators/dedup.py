@@ -138,12 +138,6 @@ def _minhash_fold(text_col: str, num_hashes: int, shingle_k: int, finish=None) -
     )
 
 
-def minhash_signature(text_col: str, num_hashes: int = 64, shingle_k: int = 3) -> Column:
-    """MinHash signature as an array<long> (md5-derived KM family, one
-    arithmetic seed per slot). One pass over the shingle array."""
-    return _minhash_fold(text_col, num_hashes, shingle_k)
-
-
 def minhash_band_keys(
     text_col: str, num_hashes: int, bands: int, shingle_k: int
 ) -> Column:

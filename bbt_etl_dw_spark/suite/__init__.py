@@ -200,8 +200,5 @@ def load_all() -> dict[str, QueryDef]:
     """Import all suite modules (triggering registration) and return the
     registry, ordered oracled-first (see _check_order)."""
     for m in _MODULES:
-        try:
-            importlib.import_module(m)
-        except ModuleNotFoundError:
-            pass  # module not built yet (suite grows round over round)
+        importlib.import_module(m)
     return {n: QUERIES[n] for n in _check_order(list(QUERIES))}

@@ -18,7 +18,12 @@ trees need several executions to reach C2 steady state (VERDICT r11 #1 /
 SCALING_r11 jit_ramp_protocol_note: minhash's 64-hash fold ramps
 21 -> 7.1 s over ~5 in-JVM executions; a 1-warmup protocol recorded the
 ramp as the query's wall). Cross-round deltas inside a query's recorded
-spread are machine load, not regression."""
+spread are machine load, not regression.
+
+This module is the one home of that protocol: ``run_noop``,
+``warm_to_plateau`` and ``timed_runs`` are also what
+``tools/probe_queries.py`` and ``tools/core_scaling.py`` measure with.
+Stage and job accounting comes from ``perfbench.trace.Tracer``."""
 
 from __future__ import annotations
 
@@ -26,9 +31,11 @@ import json
 import os
 import sys
 import time
-import urllib.request
+from contextlib import nullcontext
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench.trace import Tracer  # noqa: E402
 
 HEADLINE = [
     "pricing_summary",
@@ -42,6 +49,126 @@ HEADLINE = [
     "orders_anomaly_summary",
     "missing_value_audit",
 ]
+
+
+def protocol_settings() -> tuple[int, int, int]:
+    """(timed runs, warmup cap, extended warmup cap) from the environment.
+
+    Ramp-heavy queries (sf1 part_basket_neighbors: a fresh JVM descends
+    35 -> 8 s over ~10 executions, PROBE_PBN_SF1_r14) need more warmups
+    than the default cap, but granting 12 to every query doubles total
+    bench wall for nothing. EXTENSION policy (VERDICT r14 #3): the cap
+    doubles ONLY while the plateau test keeps failing — a query that
+    plateaus by 2-3 runs never pays extra, one still mid-ramp at
+    warm_cap gets up to warm_cap_ext runs before timing starts."""
+    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+    warm_cap = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUPS", "6"))
+    warm_cap_ext = int(
+        os.environ.get("SPARK_GRAFT_BENCH_WARMUPS_EXT", str(2 * warm_cap))
+    )
+    return n_runs, warm_cap, warm_cap_ext
+
+
+def _span(tracer: Tracer | None, layer: str):
+    if tracer is None:
+        return nullcontext()
+    # One op id per span: Tracer.resolve totals only "exec"-kind spans,
+    # keyed by op, so the builder's eager jobs keep their own entry.
+    tracer.set_op(len(tracer.spans))
+    return tracer.span(layer, "exec")
+
+
+def run_noop(spark, builder, sf_dir: str, tracer: Tracer | None = None) -> float:
+    """Wall seconds of one end-to-end execution: the builder call (its
+    eager jobs included) plus a noop-format write of the returned plan.
+    With a tracer, the two parts run under job groups ``build`` and
+    ``exec``."""
+    t0 = time.perf_counter()
+    with _span(tracer, "build"):
+        df = builder(spark, sf_dir)
+    with _span(tracer, "exec"):
+        df.write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
+def warm_to_plateau(run, warm_cap: int = 6, warm_cap_ext: int | None = None) -> int:
+    """Discarded warmup runs of ``run()`` (returns wall seconds) until the
+    C2-JIT plateau; returns the number of runs used.
+
+    Adaptive discarded warmup (VERDICT r11 #1): repeat until two
+    consecutive executions agree within 5% — the C2-JIT plateau —
+    capped at warm_cap runs. One fixed warmup under-warms large codegen
+    trees (minhash ramps over ~5 runs) and the ramp then reads as the
+    query's wall; including warmups in the spread made the noise band up
+    to 10x the value (VERDICT r05 #2), so they stay discarded. The stop
+    ALSO requires the last run within 5% of the running minimum (ADVICE
+    r12): two consecutive slow runs after a faster one was already
+    observed are an ambient-load pair, not the plateau. Past warm_cap
+    the loop continues only while runs still descend by >=5%, and never
+    beyond warm_cap_ext (default 2 * warm_cap). Known limitation: a slow
+    monotone descending ramp whose successive steps are each <5% can
+    still stop early — undetectable without unbounded extra runs; the
+    timed min-of-N passes after it bound the residual error."""
+    if warm_cap_ext is None:
+        warm_cap_ext = 2 * warm_cap
+    prev = run()
+    best = prev
+    for i in range(2, warm_cap_ext + 1):
+        cur = run()
+        best = min(best, cur)
+        if abs(cur - prev) <= 0.05 * min(cur, prev) and cur <= 1.05 * best:
+            return i
+        if i >= warm_cap and cur > 0.95 * prev:
+            # Past the base cap and no longer descending >=5% per run:
+            # the residual wobble is ambient, not ramp — stop extending
+            # (the timed min-of-N bounds what remains).
+            return i
+        prev = cur
+    return warm_cap_ext
+
+
+def trace_stats(tracer: Tracer, n_runs: int) -> dict:
+    """Stage accounting of a tracer's ``run_noop`` spans, read after the
+    timed region. Per run (mean): executor CPU seconds of all stages,
+    builder-side eager jobs included; jobs of the builder call and of the
+    noop write; completed stages; shuffle-write and spill bytes. Also the
+    worst task max/median ratio and ``missing_jobs``, the jobs the UI
+    store no longer holds; CPU would then undercount, so it is None."""
+    per_op = tracer.resolve()
+    layer = {s.op: s.layer for s in tracer.spans}
+    tot = dict.fromkeys(
+        ("build_jobs", "exec_jobs", "stages", "cpu_ms", "shuffle_bytes",
+         "spill_bytes", "missing_jobs"), 0,
+    )
+    ratio = 1.0
+    for op, st in per_op.items():
+        tot[f"{layer[op]}_jobs"] += st["jobs"]
+        for k in ("stages", "cpu_ms", "shuffle_bytes", "spill_bytes", "missing_jobs"):
+            tot[k] += st[k]
+        ratio = max(ratio, st["task_max_over_median"])
+    missing = tot["missing_jobs"]
+    return {
+        "cpu_sec_per_run": None if missing else round(tot["cpu_ms"] / 1000 / n_runs, 4),
+        **{
+            k: round(tot[k] / n_runs, 2)
+            for k in ("build_jobs", "exec_jobs", "stages", "shuffle_bytes", "spill_bytes")
+        },
+        "task_max_over_median": round(ratio, 2),
+        "missing_jobs": missing,
+    }
+
+
+def timed_runs(
+    spark, name: str, builder, sf_dir: str, n_runs: int, traced: bool = False
+) -> tuple[list[float], dict | None]:
+    """``n_runs`` timed executions of one query; with ``traced``, also its
+    ``trace_stats`` (job groups ``bench.<name>:<build|exec>:<op>``)."""
+    tracer = None
+    if traced:
+        tracer = Tracer(spark, f"bench.{name}")
+        tracer.enabled = True
+    runs = [run_noop(spark, builder, sf_dir, tracer) for _ in range(n_runs)]
+    return runs, trace_stats(tracer, n_runs) if tracer else None
 
 
 def main() -> None:
@@ -58,128 +185,28 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
 
     # Warm the JVM + parquet footers once so per-query times measure compute.
-    queries["sales_by_region"].builder(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    run_noop(spark, queries["sales_by_region"].builder, sf_dir)
 
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    warm_cap = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUPS", "6"))
-    # Ramp-heavy queries (sf1 part_basket_neighbors: a fresh JVM descends
-    # 35 -> 8 s over ~10 executions, PROBE_PBN_SF1_r14) need more warmups
-    # than the default cap, but granting 12 to every query doubles total
-    # bench wall for nothing. EXTENSION policy (VERDICT r14 #3): the cap
-    # doubles ONLY while the plateau test keeps failing — a query that
-    # plateaus by 2-3 runs never pays extra, one still mid-ramp at
-    # warm_cap gets up to warm_cap_ext runs before timing starts.
-    # Warmups stay discarded; the timed region is unchanged.
-    warm_cap_ext = int(
-        os.environ.get("SPARK_GRAFT_BENCH_WARMUPS_EXT", str(2 * warm_cap))
-    )
+    n_runs, warm_cap, warm_cap_ext = protocol_settings()
 
-    # Executor CPU time per query (VERDICT r14 #2): the sf0.1 low-core vs
+    # Stage accounting per query (VERDICT r14 #2): the sf0.1 low-core vs
     # high-core wall comparison is overhead-bound and undecidable from
     # walls alone; cumulative stage executorCpuTime over the TIMED runs
     # makes serial-vs-parallel decidable from the artifact (cpu/wall ~
-    # effective parallelism). REST read of the local UI, untimed region
-    # only — never inside a timed run.
-    # Stage-id WATERMARK accounting (same protocol as shuffle_audit.py):
-    # the UI store evicts old stages past spark.ui.retainedStages, so a
-    # cumulative sum can go DOWN between reads; summing only stages above
-    # the pre-run max stage id is eviction-proof for the short window of
-    # one query's timed runs.
-    def _stages() -> list[dict] | None:
-        try:
-            # The REST store is fed by an async listener bus: stages that
-            # just completed can be invisible for a beat, which skews both
-            # the watermark (too low -> warm stages counted) and the read
-            # (too early -> timed stages missed). Drain the bus first —
-            # untimed region, bounded wait. (The r15 OPEN artifact's cpu
-            # field was taken before this guard and the watermark landed;
-            # its handful of negative values are that earlier read's
-            # cumulative-diff-under-eviction bug, kept as committed.)
-            try:
-                spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10000)
-            except Exception:
-                pass
-            ui = spark.sparkContext.uiWebUrl
-            app_id = spark.sparkContext.applicationId
-            url = f"{ui}/api/v1/applications/{app_id}/stages?status=complete"
-            return json.load(urllib.request.urlopen(url, timeout=10))
-        except Exception:
-            return None
-
-    def stage_watermark() -> int | None:
-        stages = _stages()
-        if stages is None:
-            return None
-        return max((s["stageId"] for s in stages), default=-1)
-
-    def cpu_since_sec(watermark: int | None) -> float | None:
-        if watermark is None:
-            return None
-        stages = _stages()
-        if stages is None:
-            return None
-        return (
-            sum(
-                s.get("executorCpuTime", 0)
-                for s in stages
-                if s["stageId"] > watermark
-            )
-            / 1e9
-        )
-
-    def run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        queries[name].builder(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.perf_counter() - t0
-
-    def warm_to_plateau(name: str) -> int:
-        # Adaptive discarded warmup (VERDICT r11 #1): repeat until two
-        # consecutive executions agree within 5% — the C2-JIT plateau —
-        # capped at warm_cap runs. One fixed warmup under-warms large
-        # codegen trees (minhash ramps over ~5 runs) and the ramp then
-        # reads as the query's wall; including warmups in the spread made
-        # the noise band up to 10x the value (VERDICT r05 #2), so they
-        # stay discarded. The stop ALSO requires the last run within 5%
-        # of the running minimum (ADVICE r12): two consecutive slow runs
-        # after a faster one was already observed are an ambient-load
-        # pair, not the plateau. Known limitation: a slow monotone
-        # descending ramp whose successive steps are each <5% can still
-        # stop early — undetectable without unbounded extra runs; the
-        # timed min-of-N passes after it bound the residual error.
-        prev = run_once(name)
-        best = prev
-        for i in range(2, warm_cap_ext + 1):
-            cur = run_once(name)
-            best = min(best, cur)
-            if (
-                abs(cur - prev) <= 0.05 * min(cur, prev)
-                and cur <= 1.05 * best
-            ):
-                return i
-            if i >= warm_cap and cur > 0.95 * prev:
-                # Past the base cap and no longer descending >=5% per
-                # run: the residual wobble is ambient, not ramp — stop
-                # extending (the timed min-of-N bounds what remains).
-                return i
-            prev = cur
-        return warm_cap_ext
-
+    # effective parallelism). The first pass's timed runs are traced by
+    # job group and resolved right after them — untimed region only.
     def time_pass(warmup: bool) -> tuple[dict[str, float], dict[str, float]]:
         timings: dict[str, float] = {}
         spreads: dict[str, float] = {}
         for name in names:
+            builder = queries[name].builder
             if warmup:
-                warmups_used[name] = warm_to_plateau(name)
-                mark = stage_watermark()
-            runs = [run_once(name) for _ in range(n_runs)]
-            if warmup:
-                cpu = cpu_since_sec(mark)
-                if cpu is not None:
-                    cpu_sec[name] = round(cpu / n_runs, 4)
+                warmups_used[name] = warm_to_plateau(
+                    lambda: run_noop(spark, builder, sf_dir), warm_cap, warm_cap_ext
+                )
+            runs, stats = timed_runs(spark, name, builder, sf_dir, n_runs, traced=warmup)
+            for k, v in (stats or {}).items():
+                trace.setdefault(k, {})[name] = v
             timings[name] = round(min(runs), 4)
             # max-min across the TIMED (post-warmup) runs: the steady-state
             # ambient-load noise band. A future "regression" whose delta
@@ -193,7 +220,7 @@ def main() -> None:
     # second pass bounds the noise per query IN the artifact, so a reader
     # compares rounds against noise_band instead of guessing.
     warmups_used: dict[str, int] = {}
-    cpu_sec: dict[str, float] = {}
+    trace: dict[str, dict] = {}  # trace_stats key -> {query: value}
     timings, spreads = time_pass(warmup=True)
     timings2, _ = time_pass(warmup=False)
     noise_band = {
@@ -216,11 +243,11 @@ def main() -> None:
         "queries_run2": timings2,
         "noise_band": noise_band,
         "spread": spreads,
-        # avg executor CPU seconds per timed run (first pass): cpu/wall >> 1
-        # means the query parallelizes; cpu/wall ~ 1 at a wall that does not
-        # drop with cores means fixed overhead, not a serialization defect.
-        "cpu_sec_per_run": cpu_sec,
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        # first-pass trace_stats. cpu_sec_per_run/wall >> 1 means the
+        # query parallelizes; ~1 at a wall that does not drop with cores
+        # means fixed overhead, not a serialization defect.
+        **trace,
+        "cpus": spark.sparkContext.defaultParallelism,
         "runs_per_query": n_runs,
         "warmup_protocol": (
             f"adaptive-plateau-5pct-min-cap{warm_cap}-ext{warm_cap_ext}"

@@ -9,6 +9,8 @@ feature). The checklist is mechanical, so it should be a program:
 2. full pytest — the suite tally;
 3. full driver_sim sweep (--all, hostile tz + hostile confs) — written
    to SWEEP_r{N}.json in the committed wrapper format;
+3b. scan_audit against the committed SCAN_AUDIT_BASELINE.json (see
+   ``scan_audit_verdict``);
 4. emit_force_recheck — then byte-diff FORCE_RECHECK.json;
 5. emit_window r{N} — then byte-diff WINDOW_r{N}.txt.
 
@@ -40,6 +42,40 @@ def _git_dirty() -> str:
 
 def _artifact_diff(path: str) -> str:
     return _run(["git", "status", "--porcelain", "--", path]).stdout.strip()
+
+
+SCAN_AUDIT_BASELINE = "SCAN_AUDIT_BASELINE.json"
+
+
+def scan_audit_verdict(audit: dict, baseline: dict | None) -> tuple[bool, str]:
+    """The scan-audit close step: (passes, report line). It fails when the
+    committed baseline is missing, when a builder crashed during the audit
+    (an ``err`` entry), when the audited query set lost queries the
+    baseline has, or when the duplicated-scan mass grew past the
+    baseline's."""
+    if baseline is None:
+        return False, (
+            f"scan audit: {SCAN_AUDIT_BASELINE} missing — close invalid; "
+            f"commit one (python tools/scan_audit.py > {SCAN_AUDIT_BASELINE})"
+        )
+    crashed = sorted(n for n, q in audit["queries"].items() if "err" in q)
+    if crashed:
+        return False, (
+            f"scan audit: {len(crashed)} builder(s) crashed "
+            f"({', '.join(crashed[:5])}) — close invalid"
+        )
+    lost = sorted(set(baseline["audited"]) - set(audit["audited"]))
+    if lost:
+        return False, (
+            f"scan audit: {len(lost)} baseline queries not audited "
+            f"({', '.join(lost[:5])}) — close invalid"
+        )
+    mass, base_mass = audit["total_duplicated_scans"], baseline["total_duplicated_scans"]
+    grew = mass > base_mass
+    return not grew, (
+        f"scan audit: duplicated-scan mass {mass} vs baseline {base_mass} "
+        f"-> {'GREW — close invalid' if grew else 'OK'}"
+    )
 
 
 def main() -> int:
@@ -128,32 +164,24 @@ def main() -> int:
     # is a new duplicated-subtree instance — the r14 systemic class).
     print(f"[close {tag}] scan_audit ...", flush=True)
     sa = _run([sys.executable, "tools/scan_audit.py"])
-    base_path = os.path.join(REPO, "SCAN_AUDIT_BASELINE.json")
-    if sa.returncode != 0 or not sa.stdout.strip():
+    try:
+        audit = json.loads(sa.stdout) if sa.returncode == 0 else None
+    except ValueError:
+        audit = None
+    if audit is None:
         ok = False
         report.append(f"scan_audit FAILED (rc={sa.returncode}) — close invalid")
     else:
-        audit = json.loads(sa.stdout)
-        mass = audit.get("total_duplicated_scans")
         with open(os.path.join(REPO, f"SCAN_AUDIT_{tag}.json"), "w") as f:
             f.write(sa.stdout)
+        base_path = os.path.join(REPO, SCAN_AUDIT_BASELINE)
+        baseline = None
         if os.path.exists(base_path):
             with open(base_path) as f:
-                base_mass = json.load(f).get("total_duplicated_scans")
-            verdict = "OK" if mass <= base_mass else "GREW — close invalid"
-            report.append(
-                f"scan audit: duplicated-scan mass {mass} vs baseline "
-                f"{base_mass} -> {verdict}"
-            )
-            if mass > base_mass:
-                ok = False
-        else:
-            with open(base_path, "w") as f:
-                f.write(sa.stdout)
-            report.append(
-                f"scan audit: baseline created ({mass} duplicated scans) — "
-                "commit SCAN_AUDIT_BASELINE.json"
-            )
+                baseline = json.load(f)
+        audit_ok, msg = scan_audit_verdict(audit, baseline)
+        ok = ok and audit_ok
+        report.append(msg)
 
     # 4 + 5. evidence artifacts, then byte-diff against the committed ones
     print(f"[close {tag}] emit_force_recheck + emit_window ...", flush=True)

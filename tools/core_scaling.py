@@ -9,10 +9,9 @@ the curve. If wall does not drop near-linearly in cores, the bound is
 wrong and the query needs plan work.
 
 Per core count one fresh JVM (master is static), bench protocol per
-query: ADAPTIVE discarded warmup (repeat until two consecutive runs agree
-within 5%, cap 6 — VERDICT r11 #1: one fixed warmup under-warms large
-codegen trees; minhash ramps 21 -> 7.1 s over ~5 in-JVM executions), then
-two passes of min-of-3 timed noop writes.
+query (``bench.warm_to_plateau``: adaptive discarded warmup, cap 6,
+extended to 12 only while still descending), then two passes of min-of-3
+timed noop writes (``bench.run_noop``).
 
 Usage:
     python tools/core_scaling.py <query> <sf_dir> [cores ...]
@@ -25,10 +24,11 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from bench import run_noop, warm_to_plateau  # noqa: E402
 
 N_RUNS = 3
 
@@ -42,29 +42,9 @@ def _worker(query: str, sf_dir: str, cores: str) -> None:
     spark.sparkContext.setLogLevel("WARN")
     builder = load_all()[query].builder
 
-    def run_once() -> float:
-        t0 = time.perf_counter()
-        builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    # adaptive discarded warmup: run to the C2-JIT plateau (two
-    # consecutive executions within 5% AND the last within 5% of the
-    # running minimum — ADVICE r12: a consecutive-only rule can stop on
-    # an ambient-load pair slower than an already-seen run), cap 6 runs.
-    # Known limitation: a slow monotone descending ramp with <5% steps
-    # can still stop early; min-of-N timed passes bound the residue.
-    warmups = 1
-    prev = run_once()
-    best = prev
-    while warmups < 6:
-        cur = run_once()
-        warmups += 1
-        best = min(best, cur)
-        if abs(cur - prev) <= 0.05 * min(cur, prev) and cur <= 1.05 * best:
-            break
-        prev = cur
-    p1 = min(run_once() for _ in range(N_RUNS))
-    p2 = min(run_once() for _ in range(N_RUNS))
+    warmups = warm_to_plateau(lambda: run_noop(spark, builder, sf_dir))
+    p1 = min(run_noop(spark, builder, sf_dir) for _ in range(N_RUNS))
+    p2 = min(run_noop(spark, builder, sf_dir) for _ in range(N_RUNS))
     print(
         json.dumps(
             {

@@ -1,9 +1,11 @@
 #!/usr/bin/env python3
-"""Isolated per-query timing probe: bench.py methodology (noop sink,
-adaptive warmup, min of N) for an explicit subset of queries. Usage:
+"""Isolated per-query probe with bench.py's protocol (noop sink, adaptive
+warmup, min of N) and its tracer figures, for an explicit subset of
+queries. Usage:
     python tools/probe_queries.py name1 name2 ...
 Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS,
-SPARK_GRAFT_BENCH_RUNS (default 3), SPARK_GRAFT_BENCH_WARMUPS (default 6).
+SPARK_GRAFT_BENCH_RUNS (default 3), SPARK_GRAFT_BENCH_WARMUPS (default 6),
+SPARK_GRAFT_BENCH_WARMUPS_EXT (default twice the warmups).
 """
 
 from __future__ import annotations
@@ -11,9 +13,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import protocol_settings, run_noop, timed_runs, warm_to_plateau  # noqa: E402
 
 
 def main() -> None:
@@ -25,34 +28,20 @@ def main() -> None:
     queries = load_all()
     spark = get_spark(app_name="bbt-probe")
     spark.sparkContext.setLogLevel("WARN")
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    warm_cap = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUPS", "6"))
-
-    def run_once(name: str) -> float:
-        t0 = time.perf_counter()
-        queries[name].builder(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.perf_counter() - t0
+    n_runs, warm_cap, warm_cap_ext = protocol_settings()
 
     out = {}
     for name in names:
-        spark.sparkContext.setJobDescription(f"probe:{name}")
-        prev = run_once(name)
-        best = prev
-        warm = warm_cap
-        for i in range(2, warm_cap + 1):
-            cur = run_once(name)
-            best = min(best, cur)
-            if abs(cur - prev) <= 0.05 * min(cur, prev) and cur <= 1.05 * best:
-                warm = i
-                break
-            prev = cur
-        runs = [run_once(name) for _ in range(n_runs)]
+        builder = queries[name].builder
+        warm = warm_to_plateau(
+            lambda: run_noop(spark, builder, sf_dir), warm_cap, warm_cap_ext
+        )
+        runs, stats = timed_runs(spark, name, builder, sf_dir, n_runs, traced=True)
         out[name] = {
             "min": round(min(runs), 4),
             "spread": round(max(runs) - min(runs), 4),
             "warmups": warm,
+            **stats,
         }
         print(json.dumps({name: out[name]}), flush=True)
     print(json.dumps(out))

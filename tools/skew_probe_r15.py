@@ -2,7 +2,7 @@
 """Skew probe (VERDICT r14 #7): per-partition task-time evidence for the
 two skew classes the engine handles, measured on deliberately skewed data
 at the scale tier, with the UI REST taskSummary as the per-task source
-(same watermark protocol as bench.py / shuffle_audit.py).
+(stages above a pre-run stage-id watermark).
 
 Scenario A — OUTPUT-EXPLOSION skew (the dedup self-join class):
   a synthetic corpus where 2,000 docs share one boilerplate sentence, so a
