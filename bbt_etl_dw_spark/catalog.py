@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bbt_etl_dw_spark.session import tune
+from bbt_etl_dw_spark.sources.parquet import read_parquet_versioned
 
 TABLES = (
     "region",
@@ -34,12 +35,14 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 @functools.lru_cache(maxsize=256)
-def _needs_spread(path: str) -> bool:
+def _needs_spread(path: str, identity: tuple | None) -> bool:
     """True when the parquet file cannot split into enough tasks: Spark's
     input splits align to row groups, so a non-trivial single-row-group
     file runs every downstream narrow computation single-threaded. On a
     real lake (many files / many row groups) this returns False and the
-    spread is a no-op."""
+    spread is a no-op. Cached per file version (``identity``, from
+    :func:`~bbt_etl_dw_spark.sources.parquet.path_identity`): a table
+    rewritten at the same path is looked at again."""
     try:
         import pyarrow.parquet as pq
 
@@ -65,7 +68,7 @@ def table(
     real lake (many files/row groups) the spread is a no-op."""
     tune(spark)
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    df = spark.read.parquet(path)
+    df, identity = read_parquet_versioned(spark, path)
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         # nanos-as-long (see session.RUNTIME_CONF): truncate to micros with
         # integer division (exact on int64; float division would lose
@@ -84,7 +87,7 @@ def table(
     }
     if ntz:
         df = df.withColumns(ntz)
-    if spread and _needs_spread(path):
+    if spread and _needs_spread(path, identity):
         df = df.repartition(spark.sparkContext.defaultParallelism)
     return df
 

@@ -10,8 +10,11 @@ and incremental loads for free.
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
 from collections.abc import Sequence
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -96,6 +99,77 @@ def _hadoop_fs(spark: SparkSession, path: str):
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
+
+
+# Session confs that decide which Spark type a parquet column infers to
+# (or, for mergeSchema/respectSummaryFiles, which footers are read). A
+# cached schema is valid only under the values it was inferred with. The
+# last two type the partition columns of a hive-partitioned directory.
+SCHEMA_CONFS = (
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.timestampType",
+)
+_SCHEMA_CACHE_SIZE = 256
+_SCHEMAS: OrderedDict = OrderedDict()
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def path_identity(spark: SparkSession, path: str) -> tuple | None:
+    """Version stamp of ``path``: length and modification time of a file;
+    total length and file count (``getContentSummary``, recursive) plus
+    the modification time of a directory. Rewriting a file, and adding,
+    removing or renaming files in a directory, change it. ``None`` when
+    the path cannot be stat-ed (missing, or a glob)."""
+    try:
+        fs, p, _ = _hadoop_fs(spark, path)
+        st = fs.getFileStatus(p)
+        if st.isDirectory():
+            cs = fs.getContentSummary(p)
+            return ("dir", cs.getLength(), cs.getFileCount(), st.getModificationTime())
+        return ("file", st.getLen(), st.getModificationTime())
+    except Py4JJavaError:
+        return None
+
+
+def read_parquet_versioned(
+    spark: SparkSession, path: str
+) -> tuple[DataFrame, tuple | None]:
+    """:func:`read_parquet` plus the :func:`path_identity` its schema is
+    keyed on, for callers that cache other per-version facts."""
+    ident = path_identity(spark, path)
+    if ident is None:  # a glob infers, a missing path raises as usual
+        return spark.read.parquet(path), None
+    key = (path, ident, tuple(spark.conf.get(k) for k in SCHEMA_CONFS))
+    with _SCHEMAS_LOCK:
+        schema = _SCHEMAS.get(key)
+        if schema is not None:
+            _SCHEMAS.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path), ident
+    df = spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        _SCHEMAS[key] = df.schema
+        while len(_SCHEMAS) > _SCHEMA_CACHE_SIZE:
+            _SCHEMAS.popitem(last=False)
+    return df, ident
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per file
+    version. Inference is a one-task Spark job that reads a footer; a
+    dashboard re-reading the same snapshot paid it on every query. The
+    inferred ``StructType`` is kept in a bounded LRU keyed on the path,
+    its :func:`path_identity` and the session's :data:`SCHEMA_CONFS`, and
+    later reads pass it as the user schema — planning then runs no job.
+    The schema is the one a fresh inference returns under the same
+    confs, so results cannot change."""
+    return read_parquet_versioned(spark, path)[0]
 
 
 _ALREADY_EXISTS_CLASSES = (

@@ -72,7 +72,7 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bbt_etl_dw_spark.sources.parquet import _create_exclusive, _hadoop_fs
+from bbt_etl_dw_spark.sources.parquet import _create_exclusive, _hadoop_fs, read_parquet
 
 _MANIFEST_PREFIX = "_MANIFEST.v"
 _VERSION_DIGITS = 8
@@ -173,19 +173,24 @@ def _max_slot(spark: SparkSession, root: str) -> int:
     return versions[-1] if versions else 0
 
 
+def _latest_committed(spark: SparkSession, root: str) -> tuple[int, dict | None]:
+    """``(version, manifest)`` of the newest COMMITTED snapshot, from one
+    listing of ``root``; ``(0, None)`` if never published."""
+    for v in reversed(_list_versions(spark, root)):
+        try:
+            return v, _read_manifest(spark, root, v)
+        except ValueError:  # includes json.JSONDecodeError
+            continue
+    return 0, None
+
+
 def current_version(spark: SparkSession, root: str) -> int:
     """Highest COMMITTED (readable) manifest version; 0 if never
     published. A slot claimed by a publisher that crashed between the
     exclusive create and the content write (torn manifest) was never
     committed — readers skip it and land on the newest complete
     snapshot."""
-    for v in reversed(_list_versions(spark, root)):
-        try:
-            _read_manifest(spark, root, v)
-            return v
-        except ValueError:  # includes json.JSONDecodeError
-            continue
-    return 0
+    return _latest_committed(spark, root)[0]
 
 
 def _read_manifest(spark: SparkSession, root: str, version: int) -> dict:
@@ -280,60 +285,56 @@ def publish_tables(
     fs, rootp, jvm = _hadoop_fs(spark, root)
     fs.mkdirs(rootp)
 
+    cur_v, cur_manifest = _latest_committed(spark, root)
     if expected_version is not None:
         retries = 0
-        cur = current_version(spark, root)
-        if cur != expected_version:
+        if cur_v != expected_version:
             raise PublishConflict(
                 f"publish_tables({root}): expected version {expected_version} "
-                f"but {cur} is committed — recompute from the current "
+                f"but {cur_v} is committed — recompute from the current "
                 f"snapshot and publish again"
             )
 
     for attempt in range(retries + 1):
-        # Resolved per attempt: a retry follows someone else's commit,
-        # and carried refs must come from the snapshot readers will
-        # actually be departing from.
+        if attempt:
+            # A retry follows someone else's commit: carried refs, the
+            # schema gate and the lineage parent must all come from the
+            # snapshot readers will actually be departing from.
+            cur_v, cur_manifest = _latest_committed(spark, root)
+        prev_tables = cur_manifest["tables"] if cur_manifest else {}
         carried: dict[str, str] = {}
         if carry:
-            cur_v = current_version(spark, root)
             if cur_v <= 0:
                 raise ValueError(
                     f"publish_tables({root}): carry_forward={carry} but "
                     f"nothing is committed to carry from"
                 )
-            prev = _read_manifest(spark, root, cur_v)["tables"]
-            missing = sorted(n for n in carry if n not in prev)
+            missing = sorted(n for n in carry if n not in prev_tables)
             if missing:
                 raise KeyError(
                     f"publish_tables({root}): carry_forward tables {missing} "
                     f"not in the current snapshot v{cur_v} "
-                    f"(has {sorted(prev)})"
+                    f"(has {sorted(prev_tables)})"
                 )
-            carried = {n: prev[n] for n in carry}
-        if schema_mode != "any":
-            # Re-checked per attempt: a retry follows someone else's
-            # commit, which is the snapshot readers will hold next.
-            cur_v = current_version(spark, root)
-            if cur_v > 0:
-                prev_tables = _read_manifest(spark, root, cur_v)["tables"]
-                problems = []
-                for name, df in tables.items():
-                    rel = prev_tables.get(name)
-                    if rel is None:
-                        continue  # new table: nothing to break
-                    prev_schema = spark.read.parquet(f"{root}/{rel}").schema
-                    problems.extend(
-                        f"{name}: {p}"
-                        for p in _schema_problems(prev_schema, df.schema, schema_mode)
-                    )
-                if problems:
-                    raise SchemaEvolutionError(
-                        f"publish_tables({root}): new snapshot would break "
-                        f"readers of v{cur_v} (schema_mode={schema_mode!r}; "
-                        f"pass schema_mode='any' for an intentional breaking "
-                        f"migration): " + "; ".join(problems)
-                    )
+            carried = {n: prev_tables[n] for n in carry}
+        if schema_mode != "any" and cur_v > 0:
+            problems = []
+            for name, df in tables.items():
+                rel = prev_tables.get(name)
+                if rel is None:
+                    continue  # new table: nothing to break
+                prev_schema = read_parquet(spark, f"{root}/{rel}").schema
+                problems.extend(
+                    f"{name}: {p}"
+                    for p in _schema_problems(prev_schema, df.schema, schema_mode)
+                )
+            if problems:
+                raise SchemaEvolutionError(
+                    f"publish_tables({root}): new snapshot would break "
+                    f"readers of v{cur_v} (schema_mode={schema_mode!r}; "
+                    f"pass schema_mode='any' for an intentional breaking "
+                    f"migration): " + "; ".join(problems)
+                )
         target = _max_slot(spark, root) + 1
         # Publisher-unique staging: two racers targeting the same slot
         # must never share a data path — with a shared path they clobber
@@ -353,12 +354,12 @@ def publish_tables(
 
         manifest = {
             "version": target,
-            # Lineage: the newest COMMITTED version observed now, not
-            # target-1 — torn slots between the last commit and this one
-            # were never committed, and pointing "parent" at one sends
-            # list_snapshots/time-travel consumers to a version that
+            # Lineage: the newest COMMITTED version this attempt departed
+            # from, not target-1 — torn slots between the last commit and
+            # this one were never committed, and pointing "parent" at one
+            # sends list_snapshots/time-travel consumers to a version that
             # does not exist (ADVICE r09).
-            "parent": current_version(spark, root),
+            "parent": cur_v,
             "tables": {
                 **{name: f"{name}/{vdir}" for name in tables},
                 **carried,
@@ -402,26 +403,28 @@ def read_published(
     consistent multi-table snapshot (snapshot isolation — concurrent
     publishes cannot tear it)."""
     root = root.rstrip("/")
+    manifest = None
     if version is None:
-        version = current_version(spark, root)
+        version, manifest = _latest_committed(spark, root)
     if version <= 0:
         raise FileNotFoundError(f"read_published({root}): nothing committed")
-    try:
-        manifest = _read_manifest(spark, root, version)
-    except ValueError as exc:
-        raise FileNotFoundError(
-            f"read_published({root}): manifest v{version} is torn (claimed "
-            f"by a publisher that crashed before writing it) — it was never "
-            f"committed; the newest committed version is "
-            f"{current_version(spark, root)}"
-        ) from exc
+    if manifest is None:
+        try:
+            manifest = _read_manifest(spark, root, version)
+        except ValueError as exc:
+            raise FileNotFoundError(
+                f"read_published({root}): manifest v{version} is torn (claimed "
+                f"by a publisher that crashed before writing it) — it was never "
+                f"committed; the newest committed version is "
+                f"{current_version(spark, root)}"
+            ) from exc
     rel = manifest["tables"].get(name)
     if rel is None:
         raise KeyError(
             f"read_published({root}): table {name!r} not in snapshot "
             f"v{version} (has {sorted(manifest['tables'])})"
         )
-    return spark.read.parquet(f"{root}/{rel}")
+    return read_parquet(spark, f"{root}/{rel}")
 
 
 def list_snapshots(spark: SparkSession, root: str) -> list[dict]:

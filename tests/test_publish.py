@@ -816,3 +816,36 @@ def test_rollback_to_never_claimed_version_is_a_distinct_error(spark, tmp_path):
     publish_tables(_snap(spark, "only"), root)
     with pytest.raises(FileNotFoundError, match=r"v7 does not exist"):
         rollback_published(spark, root, to_version=7)
+
+
+def test_manifest_resolved_once_per_call(spark, tmp_path, monkeypatch):
+    """read_published parses the newest manifest once; a publish with
+    carry_forward and the schema gate lists the root once for the
+    committed snapshot (plus once for the slot) and parses it once."""
+    from bbt_etl_dw_spark.sources import publish as pub
+
+    root = str(tmp_path / "wh")
+    publish_tables(_snap(spark, "a"), root)
+    calls = {"list": 0, "read": 0}
+    list_versions, read_manifest = pub._list_versions, pub._read_manifest
+
+    def counted_list(*a):
+        calls["list"] += 1
+        return list_versions(*a)
+
+    def counted_read(*a):
+        calls["read"] += 1
+        return read_manifest(*a)
+
+    monkeypatch.setattr(pub, "_list_versions", counted_list)
+    monkeypatch.setattr(pub, "_read_manifest", counted_read)
+    assert read_published(spark, root, "fact").count() == 5
+    assert calls == {"list": 1, "read": 1}
+
+    calls.update(list=0, read=0)
+    v = publish_tables(
+        {"fact": _snap(spark, "b")["fact"]}, root, carry_forward=["dim"]
+    )
+    assert v == 2 and calls == {"list": 2, "read": 1}
+    with open(os.path.join(root, "_MANIFEST.v00000002.json")) as f:
+        assert json.load(f)["parent"] == 1
