@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bbt_etl_dw_spark.jvm import jvm_class
+
 
 def snapshot_diff(
     old: DataFrame,
@@ -205,16 +207,14 @@ def apply_changes(
     }
     emptied = [p for p in affected_str if p not in remaining]
     if emptied:
-        jvm = spark._jvm
         conf = spark._jsc.hadoopConfiguration()
-        esc = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        esc = jvm_class(spark, "org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils")
+        path_cls = jvm_class(spark, "org.apache.hadoop.fs.Path")
         for p in emptied:
             dirname = esc.getPartitionPathString(
                 part_col, "__HIVE_DEFAULT_PARTITION__" if p is None else p
             )
-            jpath = jvm.org.apache.hadoop.fs.Path(
-                f"{target_path.rstrip('/')}/{dirname}"
-            )
+            jpath = path_cls(f"{target_path.rstrip('/')}/{dirname}")
             fs = jpath.getFileSystem(conf)
             if fs.exists(jpath):
                 fs.delete(jpath, True)

@@ -5,7 +5,9 @@
 
 Where the reference materializes a parquet directory between every script,
 this builds a single lazy Catalyst plan per output: the only eager step is
-the audit (two jobs), because its counts DRIVE the cleaning plan — that
+the audit (2 metrics jobs + 3 duplicate-count jobs under AQE, plus one per
+violated rule: 9 jobs at sf0.005 with 4 violated rules; see
+``operators.audit.audit``), because its counts DRIVE the cleaning plan — that
 report-driven dynamic planning is the reference's signature behavior
 (``data_cleaning.py:64-105``). Everything downstream (enrich, tax,
 currency, anomaly flagging) stays unmaterialized until the caller sinks

@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from bbt_etl_dw_spark.jvm import jvm_class
+
 RUNTIME_CONF = {
     # Settable on a live session (e.g. one the test driver built for us).
     "spark.sql.session.timeZone": "UTC",
@@ -120,11 +122,9 @@ def tune(spark: SparkSession) -> SparkSession:
     # boots. Point it at the JVM temp dir; a no-op if the caller already
     # set it or Derby is never loaded.
     try:
-        jvm = spark._jvm
-        if jvm.System.getProperty("derby.system.home") is None:
-            jvm.System.setProperty(
-                "derby.system.home", jvm.System.getProperty("java.io.tmpdir")
-            )
+        system = jvm_class(spark, "java.lang.System")
+        if system.getProperty("derby.system.home") is None:
+            system.setProperty("derby.system.home", system.getProperty("java.io.tmpdir"))
     except Exception:
         pass
     _TUNED_SESSIONS.add(token)

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from bbt_etl_dw_spark.jvm import jvm_class
+
 
 def estimate_row_bytes(
     df: DataFrame, sample_rows: int = 1000, sample_fraction: float = 0.05
@@ -106,10 +108,9 @@ def compact_directory(
 
 def _on_disk_bytes(spark: SparkSession, src: str) -> int:
     """Recursive byte count of the data files under ``src`` via the Hadoop
-    FileSystem API (spark._jvm). Hidden/metadata files (_SUCCESS, .crc,
-    _committed markers) are excluded — they are not table bytes."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(src)
+    FileSystem API. Hidden/metadata files (_SUCCESS, .crc, _committed
+    markers) are excluded — they are not table bytes."""
+    jpath = jvm_class(spark, "org.apache.hadoop.fs.Path")(src)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(jpath):
         raise ValueError(f"compact_directory: path does not exist: {src!r}")

@@ -18,6 +18,8 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bbt_etl_dw_spark.jvm import jvm_class
+
 
 def layer_path(root: str, layer: str, source: str) -> str:
     return f"{root.rstrip('/')}/{layer}/{source}"
@@ -95,15 +97,18 @@ class ConcurrentWriteDetected(RuntimeError):
     """The fence observed the target change between snapshot and swap."""
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    return jvm_class(spark, "org.apache.hadoop.fs.Path")(path)
+
+
 def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
+    p = _hadoop_path(spark, path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, spark._jvm
 
 
 # Session confs that decide which Spark type a parquet column infers to
 # (or, for mergeSchema/respectSummaryFiles, which footers are read). A
-# cached schema is valid only under the values it was inferred with. The
+# cached relation is valid only under the values it was resolved with. The
 # last two type the partition columns of a hive-partitioned directory.
 SCHEMA_CONFS = (
     "spark.sql.parquet.inferTimestampNTZ.enabled",
@@ -115,6 +120,8 @@ SCHEMA_CONFS = (
     "spark.sql.sources.partitionColumnTypeInference.enabled",
     "spark.sql.timestampType",
 )
+# Resolved parquet relations (a py4j handle to each analyzed
+# LogicalRelation), least recently used first; see read_parquet.
 _SCHEMA_CACHE_SIZE = 256
 _SCHEMAS: OrderedDict = OrderedDict()
 _SCHEMAS_LOCK = threading.Lock()
@@ -140,35 +147,48 @@ def path_identity(spark: SparkSession, path: str) -> tuple | None:
 def read_parquet_versioned(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, tuple | None]:
-    """:func:`read_parquet` plus the :func:`path_identity` its schema is
+    """:func:`read_parquet` plus the :func:`path_identity` its relation is
     keyed on, for callers that cache other per-version facts."""
     ident = path_identity(spark, path)
     if ident is None:  # a glob infers, a missing path raises as usual
         return spark.read.parquet(path), None
-    key = (path, ident, tuple(spark.conf.get(k) for k in SCHEMA_CONFS))
+    session = spark._jsparkSession
+    key = (
+        path,
+        ident,
+        tuple(spark.conf.get(k) for k in SCHEMA_CONFS),
+        (spark._jvm._gateway_client, session._target_id),
+    )
     with _SCHEMAS_LOCK:
-        schema = _SCHEMAS.get(key)
-        if schema is not None:
+        relation = _SCHEMAS.get(key)
+        if relation is not None:
             _SCHEMAS.move_to_end(key)
-    if schema is not None:
-        return spark.read.schema(schema).parquet(path), ident
+    if relation is not None:
+        dataset = jvm_class(spark, "org.apache.spark.sql.classic.Dataset")
+        return DataFrame(dataset.ofRows(session, relation.newInstance()), spark), ident
     df = spark.read.parquet(path)
     with _SCHEMAS_LOCK:
-        _SCHEMAS[key] = df.schema
+        _SCHEMAS[key] = df._jdf.queryExecution().analyzed()
         while len(_SCHEMAS) > _SCHEMA_CACHE_SIZE:
             _SCHEMAS.popitem(last=False)
     return df, ident
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` that infers the schema once per file
-    version. Inference is a one-task Spark job that reads a footer; a
-    dashboard re-reading the same snapshot paid it on every query. The
-    inferred ``StructType`` is kept in a bounded LRU keyed on the path,
-    its :func:`path_identity` and the session's :data:`SCHEMA_CONFS`, and
-    later reads pass it as the user schema — planning then runs no job.
-    The schema is the one a fresh inference returns under the same
-    confs, so results cannot change."""
+    """``spark.read.parquet(path)`` that resolves the relation once per
+    file version. Resolving infers the schema (a one-task Spark job that
+    reads a footer) and lists the files; a dashboard re-reading the same
+    snapshot paid both on every query. The analyzed ``LogicalRelation``,
+    which holds the schema and the file listing, is kept in a bounded LRU
+    keyed on the path, its :func:`path_identity`, the session's
+    :data:`SCHEMA_CONFS` and the JVM session, so a relation never crosses
+    into another session. A later read wraps ``relation.newInstance()``:
+    the same files and schema under fresh attribute ids, so two reads of
+    one table self-join like two fresh reads. Planning then runs no job
+    and lists nothing. A file version is what :func:`path_identity`
+    sees: a directory rewritten below its top level with the same total
+    length and file count, and no entry of its own renamed, is not
+    re-listed."""
     return read_parquet_versioned(spark, path)[0]
 
 
@@ -232,7 +252,7 @@ def _create_exclusive(fs, jvm, p):
             raise
         is_local = False
     if is_local:
-        f = jvm.java.io.File(p.toUri().getPath())
+        f = jvm_class(jvm, "java.io.File")(p.toUri().getPath())
         # createNewFile (unlike Hadoop's create()) does NOT make parent
         # directories; the first-ever claim under a fresh root must not
         # fail with an opaque IOException.
@@ -241,7 +261,7 @@ def _create_exclusive(fs, jvm, p):
             parent.mkdirs()
         if not f.createNewFile():
             return None
-        return jvm.java.io.FileOutputStream(f)
+        return jvm_class(jvm, "java.io.FileOutputStream")(f)
     try:
         return fs.create(p, False)
     except Exception as exc:
@@ -357,10 +377,8 @@ def vacuum_orphans(
     lock = acquire_swap_lock(spark, path, owner="vacuum_orphans")
     removed: list[str] = []
     try:
-        fs, root, jvm = _hadoop_fs(spark, path)
-        staging = jvm.org.apache.hadoop.fs.Path(
-            f"{path.rstrip('/')}.__staging__"
-        )
+        fs, root, _ = _hadoop_fs(spark, path)
+        staging = _hadoop_path(spark, f"{path.rstrip('/')}.__staging__")
         if fs.exists(staging):
             fs.delete(staging, True)
             removed.append(staging.toString())
@@ -444,9 +462,9 @@ def overwrite_atomic(
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(staging)
-        fs, dst, jvm = _hadoop_fs(spark, path)
-        src = jvm.org.apache.hadoop.fs.Path(staging)
-        jold = jvm.org.apache.hadoop.fs.Path(old)
+        fs, dst, _ = _hadoop_fs(spark, path)
+        src = _hadoop_path(spark, staging)
+        jold = _hadoop_path(spark, old)
         if fs.exists(jold):
             fs.delete(src, True)
             raise ConcurrentWriteDetected(

@@ -66,19 +66,31 @@ from __future__ import annotations
 
 import json
 import re
+import threading
 import time
 import uuid
 from collections.abc import Mapping, Sequence
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
-from bbt_etl_dw_spark.sources.parquet import _create_exclusive, _hadoop_fs, read_parquet
+from bbt_etl_dw_spark.jvm import jvm_class
+from bbt_etl_dw_spark.sources.parquet import (
+    _create_exclusive,
+    _hadoop_fs,
+    _hadoop_path,
+    read_parquet,
+)
 
 _MANIFEST_PREFIX = "_MANIFEST.v"
 _VERSION_DIGITS = 8
 # Version directory inside a table dir: v00000002 (legacy/orphan) or
 # v00000002-<hex token> (publisher-unique staging, the committed form).
 _VDIR_RE = re.compile(r"^v(\d+)(?:-[0-9a-f]+)?$")
+# A manifest in the JVM's one-string rendering of a listing,
+# "{<root>/_MANIFEST.v00000001.json,<root>/fact,...}": the last path
+# component, ended by the next entry or the closing brace.
+_LISTED_MANIFEST_RE = re.compile(r"/_MANIFEST\.v(\d+)\.json(?=[,}])")
 
 
 class PublishConflict(Exception):
@@ -116,14 +128,25 @@ def _nullable_normalized(dt):
     return dt
 
 
-def _schema_problems(prev_schema, new_schema, mode: str) -> list[str]:
+def _schema_problems(
+    prev_schema, new_schema, mode: str, from_dir_names=frozenset()
+) -> list[str]:
     """Incompatibilities between a table's committed schema and its
     replacement, under ``mode`` ("additive": existing columns must keep
     their name and type, new columns may appear; "same": exact column
     set). Nullability is ignored at every nesting depth — parquet
-    round-trips flip it."""
-    prev = {f.name: _nullable_normalized(f.dataType) for f in prev_schema.fields}
+    round-trips flip it. Columns in ``from_dir_names`` are hive partition
+    columns of the committed snapshot: their read-back type is inferred
+    from directory names (a bigint ``id % 2`` reads back as int), not
+    written, so they are compared against the new frame's own type — only
+    dropping one is a problem."""
     new = {f.name: _nullable_normalized(f.dataType) for f in new_schema.fields}
+    prev = {
+        f.name: new[f.name]
+        if f.name in from_dir_names and f.name in new
+        else _nullable_normalized(f.dataType)
+        for f in prev_schema.fields
+    }
     problems = []
     for name, dt in prev.items():
         if name not in new:
@@ -140,6 +163,14 @@ def _schema_problems(prev_schema, new_schema, mode: str) -> list[str]:
     return problems
 
 
+def _partition_columns(df: DataFrame) -> frozenset[str]:
+    """Columns a parquet read takes from hive partition directory names."""
+    relation = df._jdf.queryExecution().analyzed().relation()
+    return frozenset(
+        f["name"] for f in json.loads(relation.partitionSchema().json())["fields"]
+    )
+
+
 def _manifest_name(version: int) -> str:
     return f"{_MANIFEST_PREFIX}{version:0{_VERSION_DIGITS}d}.json"
 
@@ -150,17 +181,19 @@ def _manifest_name(version: int) -> str:
 
 
 def _list_versions(spark: SparkSession, root: str) -> list[int]:
+    """Claimed manifest versions under ``root``, ascending. One listing,
+    rendered JVM-side into one string of paths, so the cost does not grow
+    with the number of table directories beside the manifests."""
     fs, p, _ = _hadoop_fs(spark, root)
-    if not fs.exists(p):
-        return []
-    out = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if name.startswith(_MANIFEST_PREFIX) and name.endswith(".json"):
-            body = name[len(_MANIFEST_PREFIX) : -len(".json")]
-            if body.isdigit():
-                out.append(int(body))
-    return sorted(out)
+    try:
+        statuses = fs.listStatus(p)
+    except Py4JJavaError as exc:
+        if exc.java_exception.getClass().getName() == "java.io.FileNotFoundException":
+            return []
+        raise
+    paths = jvm_class(spark, "org.apache.hadoop.fs.FileUtil").stat2Paths(statuses)
+    listed = jvm_class(spark, "org.apache.commons.lang3.ArrayUtils").toString(paths)
+    return sorted(int(v) for v in _LISTED_MANIFEST_RE.findall(listed))
 
 
 def _max_slot(spark: SparkSession, root: str) -> int:
@@ -173,12 +206,17 @@ def _max_slot(spark: SparkSession, root: str) -> int:
     return versions[-1] if versions else 0
 
 
-def _latest_committed(spark: SparkSession, root: str) -> tuple[int, dict | None]:
-    """``(version, manifest)`` of the newest COMMITTED snapshot, from one
-    listing of ``root``; ``(0, None)`` if never published."""
-    for v in reversed(_list_versions(spark, root)):
+def _latest_committed(
+    spark: SparkSession, root: str, versions: list[int] | None = None
+) -> tuple[int, dict | None]:
+    """``(version, manifest)`` of the newest COMMITTED snapshot among
+    ``versions`` (default: one listing of ``root``); ``(0, None)`` if
+    never published."""
+    if versions is None:
+        versions = _list_versions(spark, root)
+    for v in reversed(versions):
         try:
-            return v, _read_manifest(spark, root, v)
+            return v, _read_manifest(spark, root, v, versions)
         except ValueError:  # includes json.JSONDecodeError
             continue
     return 0, None
@@ -193,19 +231,48 @@ def current_version(spark: SparkSession, root: str) -> int:
     return _latest_committed(spark, root)[0]
 
 
-def _read_manifest(spark: SparkSession, root: str, version: int) -> dict:
-    fs, _, jvm = _hadoop_fs(spark, root)
-    mp = jvm.org.apache.hadoop.fs.Path(f"{root.rstrip('/')}/{_manifest_name(version)}")
-    stream = fs.open(mp)
+# Parsed committed manifests by (root, version). The protocol never
+# rewrites a committed manifest: its slot was claimed exclusively and the
+# claimant wrote it once. gc may delete it, so a kept one is served only
+# while a fresh listing still shows it. A root deleted outside the API and
+# published afresh at the same path reuses version numbers; a kept
+# manifest then names table directories that no longer exist, and the
+# read fails on the missing path instead of returning old data.
+_MANIFESTS: dict[tuple[str, int], dict] = {}
+_MANIFEST_CACHE_SIZE = 1024
+_MANIFESTS_LOCK = threading.Lock()
+
+
+def _read_manifest(
+    spark: SparkSession, root: str, version: int, listed: list[int]
+) -> dict:
+    """Manifest ``version`` of ``root``, parsed once per (root, version).
+    The kept parse is used only when ``listed`` (the versions a listing of
+    ``root`` just returned) holds ``version``; otherwise the manifest is
+    opened, so a gc'd or never-claimed version raises as the open does. A
+    torn (unparseable) manifest raises ``ValueError`` and is not kept: its
+    claimant may still be writing it. Callers treat the result as
+    read-only."""
+    key = (root.rstrip("/"), version)
+    kept = _MANIFESTS.get(key) if version in listed else None
+    if kept is not None:
+        return kept
+    fs, _, _ = _hadoop_fs(spark, root)
+    stream = fs.open(_hadoop_path(spark, f"{key[0]}/{_manifest_name(version)}"))
     try:
         # py4j passes byte[] buffers by value (mutations don't propagate
         # back), so buffered reads into a Python bytearray silently yield
         # nothing — let the JVM drain the stream instead. commons-io
         # ships with Hadoop.
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        text = jvm_class(spark, "org.apache.commons.io.IOUtils").toString(stream, "UTF-8")
     finally:
         stream.close()
-    return json.loads(text)
+    manifest = json.loads(text)
+    with _MANIFESTS_LOCK:
+        while len(_MANIFESTS) >= _MANIFEST_CACHE_SIZE:
+            del _MANIFESTS[next(iter(_MANIFESTS))]
+        _MANIFESTS[key] = manifest
+    return manifest
 
 
 def publish_tables(
@@ -323,10 +390,12 @@ def publish_tables(
                 rel = prev_tables.get(name)
                 if rel is None:
                     continue  # new table: nothing to break
-                prev_schema = read_parquet(spark, f"{root}/{rel}").schema
+                prev = read_parquet(spark, f"{root}/{rel}")
                 problems.extend(
                     f"{name}: {p}"
-                    for p in _schema_problems(prev_schema, df.schema, schema_mode)
+                    for p in _schema_problems(
+                        prev.schema, df.schema, schema_mode, _partition_columns(prev)
+                    )
                 )
             if problems:
                 raise SchemaEvolutionError(
@@ -365,7 +434,7 @@ def publish_tables(
                 **carried,
             },
         }
-        mp = jvm.org.apache.hadoop.fs.Path(f"{root}/{_manifest_name(target)}")
+        mp = _hadoop_path(spark, f"{root}/{_manifest_name(target)}")
         # THE commit point: exclusive create of the version slot.
         # Exactly one publisher can win a given version; everything
         # before this line is invisible, everything after is durable.
@@ -373,12 +442,12 @@ def publish_tables(
             stream = _create_exclusive(fs, jvm, mp)
         except Exception:
             for data_path in staged:  # real IO failure, not a lost race
-                fs.delete(jvm.org.apache.hadoop.fs.Path(data_path), True)
+                fs.delete(_hadoop_path(spark, data_path), True)
             raise
         if stream is None:  # lost the race
             # Only its own token dirs — never another publisher's data.
             for data_path in staged:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(data_path), True)
+                fs.delete(_hadoop_path(spark, data_path), True)
             if attempt < retries:
                 continue
             raise PublishConflict(
@@ -401,16 +470,22 @@ def read_published(
     """Read table ``name`` from the committed snapshot ``version``
     (default: latest). Pass one ``version`` to every read in a job for a
     consistent multi-table snapshot (snapshot isolation — concurrent
-    publishes cannot tear it)."""
+    publishes cannot tear it).
+
+    A warm read costs one listing of ``root``, no manifest parse (see
+    :func:`_read_manifest`) and a relation-cache hit in
+    :func:`~bbt_etl_dw_spark.sources.parquet.read_parquet`: no Spark job,
+    no listing of the table directory."""
     root = root.rstrip("/")
+    versions = _list_versions(spark, root)
     manifest = None
     if version is None:
-        version, manifest = _latest_committed(spark, root)
+        version, manifest = _latest_committed(spark, root, versions)
     if version <= 0:
         raise FileNotFoundError(f"read_published({root}): nothing committed")
     if manifest is None:
         try:
-            manifest = _read_manifest(spark, root, version)
+            manifest = _read_manifest(spark, root, version, versions)
         except ValueError as exc:
             raise FileNotFoundError(
                 f"read_published({root}): manifest v{version} is torn (claimed "
@@ -436,12 +511,13 @@ def list_snapshots(spark: SparkSession, root: str) -> list[dict]:
     time travel: pick a version here, pin it there."""
     root = root.rstrip("/")
     out = []
-    for v in _list_versions(spark, root):
+    versions = _list_versions(spark, root)
+    for v in versions:
         try:
-            m = _read_manifest(spark, root, v)
+            m = _read_manifest(spark, root, v, versions)
         except ValueError:
             continue
-        snap = {"version": v, "parent": m.get("parent"), "tables": m["tables"]}
+        snap = {"version": v, "parent": m.get("parent"), "tables": dict(m["tables"])}
         if "rollback_of" in m:
             snap["rollback_of"] = m["rollback_of"]
         out.append(snap)
@@ -470,19 +546,17 @@ def rollback_published(
     stages nothing and derives nothing from the current snapshot)."""
     root = root.rstrip("/")
     fs, _, jvm = _hadoop_fs(spark, root)
-    mp_target = jvm.org.apache.hadoop.fs.Path(
-        f"{root}/{_manifest_name(to_version)}"
-    )
+    versions = _list_versions(spark, root)
     # Distinguish "that version was never claimed at all" (fs.open would
     # surface a raw Py4JJavaError misattributing the failure) from the
     # torn-manifest case below.
-    if not fs.exists(mp_target):
+    if to_version not in versions:
         raise FileNotFoundError(
             f"rollback_published({root}): v{to_version} does not exist — "
             f"no snapshot was ever claimed at that version"
         )
     try:
-        target_tables = _read_manifest(spark, root, to_version)["tables"]
+        target_tables = _read_manifest(spark, root, to_version, versions)["tables"]
     except ValueError as exc:
         raise FileNotFoundError(
             f"rollback_published({root}): v{to_version} is torn (claimed "
@@ -496,7 +570,7 @@ def rollback_published(
             "rollback_of": to_version,
             "tables": target_tables,
         }
-        mp = jvm.org.apache.hadoop.fs.Path(f"{root}/{_manifest_name(target)}")
+        mp = _hadoop_path(spark, f"{root}/{_manifest_name(target)}")
         stream = _create_exclusive(fs, jvm, mp)
         if stream is None:  # lost the race; nothing staged to clean
             if attempt < retries:
@@ -522,8 +596,10 @@ def diff_snapshots(
     [...], "carried": [...]}``. ``carried`` tables reference the exact
     same directory in both versions (zero bytes moved — the
     ``carry_forward`` path); ``rewritten`` tables were re-staged."""
-    mo = _read_manifest(spark, root.rstrip("/"), old)["tables"]
-    mn = _read_manifest(spark, root.rstrip("/"), new)["tables"]
+    root = root.rstrip("/")
+    versions = _list_versions(spark, root)
+    mo = _read_manifest(spark, root, old, versions)["tables"]
+    mn = _read_manifest(spark, root, new, versions)["tables"]
     return {
         "added": sorted(set(mn) - set(mo)),
         "removed": sorted(set(mo) - set(mn)),
@@ -568,9 +644,10 @@ def gc_published(
     committed: set[int] = set()
     referenced: set[str] = set()
     manifests: dict[int, dict] = {}
-    for v in _list_versions(spark, root):
+    versions = _list_versions(spark, root)
+    for v in versions:
         try:
-            manifests[v] = _read_manifest(spark, root, v)
+            manifests[v] = _read_manifest(spark, root, v, versions)
             committed.add(v)
         except ValueError:
             continue  # torn manifest: age-gated below

@@ -35,6 +35,8 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bbt_etl_dw_spark.jvm import jvm_class
+
 MANIFEST_NAME = "_shard_manifest.json"
 
 
@@ -58,8 +60,9 @@ def _row_checksum(cols: list[str]):
 
 
 def _manifest_path(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    return jvm.org.apache.hadoop.fs.Path(f"{path.rstrip('/')}/{MANIFEST_NAME}")
+    return jvm_class(spark, "org.apache.hadoop.fs.Path")(
+        f"{path.rstrip('/')}/{MANIFEST_NAME}"
+    )
 
 
 def _write_manifest(spark: SparkSession, path: str, manifest: dict) -> None:
@@ -73,12 +76,11 @@ def _write_manifest(spark: SparkSession, path: str, manifest: dict) -> None:
 
 
 def _read_manifest(spark: SparkSession, path: str) -> dict:
-    jvm = spark._jvm
     jpath = _manifest_path(spark, path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     # plain-JDK line reader: no extra classpath dependency
-    reader = jvm.java.io.BufferedReader(
-        jvm.java.io.InputStreamReader(fs.open(jpath), "UTF-8")
+    reader = jvm_class(spark, "java.io.BufferedReader")(
+        jvm_class(spark, "java.io.InputStreamReader")(fs.open(jpath), "UTF-8")
     )
     lines = []
     try:

@@ -52,7 +52,9 @@ def _fs_exists(spark: SparkSession, path: str) -> bool:
     read (unable-to-infer-schema) forever — a permanently wedged stream.
     Hidden entries (``_*``, ``.*``) are uncommitted or metadata by the
     FileOutputCommitter contract and don't count."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    from bbt_etl_dw_spark.sources.parquet import _hadoop_path
+
+    jpath = _hadoop_path(spark, path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(jpath):
         return False
@@ -333,6 +335,7 @@ def compact_epochs(
     from bbt_etl_dw_spark.sources.parquet import (
         ConcurrentWriteDetected,
         _hadoop_fs,
+        _hadoop_path,
         overwrite_atomic,
     )
 
@@ -409,13 +412,11 @@ def compact_epochs(
                     f"previous table is preserved at {raced.old_dir} — "
                     f"inspect and merge manually."
                 ) from raced
-            fs, dstp, jvm = _hadoop_fs(spark, path)
-            oldp = jvm.org.apache.hadoop.fs.Path(raced.old_dir)
+            fs, dstp, _ = _hadoop_fs(spark, path)
+            oldp = _hadoop_path(spark, raced.old_dir)
             for name in raced.raced:
-                src = jvm.org.apache.hadoop.fs.Path(f"{raced.old_dir}/{name}")
-                dst = jvm.org.apache.hadoop.fs.Path(
-                    f"{path.rstrip('/')}/{name}"
-                )
+                src = _hadoop_path(spark, f"{raced.old_dir}/{name}")
+                dst = _hadoop_path(spark, f"{path.rstrip('/')}/{name}")
                 # an idempotent replay may have re-landed the epoch in the
                 # new table already — identical content, skip the restore
                 if fs.exists(dst):

@@ -9,6 +9,7 @@ where SQL-expressible, an equivalent ANSI-SQL oracle string for DuckDB.
 from __future__ import annotations
 
 import importlib
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -135,7 +136,7 @@ def _last_verified_round() -> dict[str, int]:
 # touching review batches, so the population is no longer a judgment call.
 
 
-def _load_force_recheck(path: str | None = None) -> frozenset[str]:
+def _load_force_recheck(path: str | None = None) -> dict[str, str]:
     import json
     import os
 
@@ -153,16 +154,30 @@ def _load_force_recheck(path: str | None = None) -> frozenset[str]:
         with open(path) as f:
             data = json.load(f)
     except FileNotFoundError:
-        return frozenset()
+        return {}
     if not isinstance(data, dict):
         raise ValueError(
             f"{path}: expected a {{query: reason}} object, "
             f"got {type(data).__name__}"
         )
-    return frozenset(data)
+    return data
 
 
-_FORCE_RECHECK: frozenset[str] = _load_force_recheck()
+_FORCED_SINCE_RE = re.compile(r"forced since (\S+)")
+
+
+def forced_since(reason: str) -> str:
+    """The ISO-8601 UTC time a FORCE_RECHECK.json reason records as the
+    query's first forcing ("changed since r14: impl; forced since
+    2026-10-17T20:55:35Z"); "" when it records none."""
+    m = _FORCED_SINCE_RE.search(reason)
+    return m.group(1) if m else ""
+
+
+_FORCED_SINCE: dict[str, str] = {
+    n: forced_since(why) for n, why in _load_force_recheck().items()
+}
+_FORCE_RECHECK: frozenset[str] = frozenset(_FORCED_SINCE)
 # Rotation reality check (r07): never-verified
 # queries flood the window ahead of stale-verified ones by design — the
 # round-6 registration burst (88 new queries) meant the r06 window was
@@ -182,16 +197,18 @@ def _check_order(names: list[str]) -> list[str]:
     latest = _last_verified_round()
     reg_idx = {n: i for i, n in enumerate(names)}
 
-    def recency(n: str) -> int:
+    def recency(n: str) -> tuple:
         # three tiers: never-driver-verified first (strictly less evidenced
         # than anything), then changed-since-evidence (FORCE_RECHECK.json,
-        # ordered by how old the invalidated evidence is), then merely
-        # stale by ascending evidence round.
+        # longest-forced first, so a shared-helper change that forces most
+        # of the registry queues behind the queries forced before it; ties
+        # by how old the invalidated evidence is), then merely stale by
+        # ascending evidence round.
         if n not in latest:
-            return -1_000_000
+            return (0, "", 0)
         if n in _FORCE_RECHECK:
-            return latest[n] - 1_000
-        return latest[n]
+            return (1, _FORCED_SINCE.get(n, ""), latest[n])
+        return (2, "", latest[n])
 
     return sorted(names, key=lambda n: (recency(n), reg_idx[n]))
 

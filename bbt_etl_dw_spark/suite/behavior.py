@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bbt_etl_dw_spark.catalog import table
+from bbt_etl_dw_spark.jvm import jvm_class
 from bbt_etl_dw_spark.operators.ckpt import materialize
 from bbt_etl_dw_spark.operators.behavior import WEEK_ANCHOR_DAY as _EPOCH_ANCHOR_DAY
 from bbt_etl_dw_spark.suite import register
@@ -208,7 +209,7 @@ def events_frequency_sketch_check(spark: SparkSession, sf_dir: str) -> DataFrame
     blob = ev.agg(
         F.expr(f"count_min_sketch(user_id, {eps}d, 0.9999d, 42)")
     ).collect()[0][0]
-    cms = spark._jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(
+    cms = jvm_class(spark, "org.apache.spark.util.sketch.CountMinSketch").readFrom(
         bytes(blob)
     )
     top = (

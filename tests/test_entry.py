@@ -72,11 +72,11 @@ def test_force_recheck_loader_is_loud_on_corruption(tmp_path):
     from bbt_etl_dw_spark.suite import _load_force_recheck
 
     missing = str(tmp_path / "nope.json")
-    assert _load_force_recheck(missing) == frozenset()
+    assert _load_force_recheck(missing) == {}
 
     ok = tmp_path / "ok.json"
     ok.write_text(json.dumps({"q_a": "changed since r04: impl"}))
-    assert _load_force_recheck(str(ok)) == frozenset({"q_a"})
+    assert _load_force_recheck(str(ok)) == {"q_a": "changed since r04: impl"}
 
     corrupt = tmp_path / "corrupt.json"
     corrupt.write_text("{not json")
@@ -87,3 +87,31 @@ def test_force_recheck_loader_is_loud_on_corruption(tmp_path):
     wrong_shape.write_text(json.dumps(["q_a", "q_b"]))
     with pytest.raises(ValueError, match="expected a"):
         _load_force_recheck(str(wrong_shape))
+
+
+def test_longest_forced_query_sorts_first(monkeypatch):
+    """The forced tier is ordered by how long each query has been forced:
+    a query forced earlier goes ahead of a newly forced one even when the
+    newcomer's evidence is older, so a shared-helper change that forces
+    most of the registry cannot push earlier-forced queries out of the
+    driver window."""
+    import bbt_etl_dw_spark.suite as suite
+
+    reason = "changed since r14: impl; forced since 2026-10-17T20:55:35Z"
+    assert suite.forced_since(reason) == "2026-10-17T20:55:35Z"
+    assert suite.forced_since("changed since r14: impl") == ""
+    monkeypatch.setattr(
+        suite, "_last_verified_round", lambda: {"early": 15, "newcomer": 10, "stale": 3}
+    )
+    monkeypatch.setattr(
+        suite,
+        "_FORCED_SINCE",
+        {"early": "2026-10-17T20:55:35Z", "newcomer": "2026-10-19T09:00:00Z"},
+    )
+    monkeypatch.setattr(suite, "_FORCE_RECHECK", frozenset({"early", "newcomer"}))
+    assert suite._check_order(["stale", "newcomer", "early", "never"]) == [
+        "never",
+        "early",
+        "newcomer",
+        "stale",
+    ]

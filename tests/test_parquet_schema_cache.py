@@ -1,12 +1,13 @@
-"""sources.parquet.read_parquet: each parquet schema is inferred once per
-file version and session type-mapping confs, so warm catalog and snapshot
-reads plan without a Spark job — and the schema they use is always the
-one a fresh inference returns."""
+"""sources.parquet.read_parquet: each parquet relation is resolved once per
+file version, session type-mapping confs and JVM session, so warm catalog
+and snapshot reads plan without a Spark job or a listing — and the schema
+they use is always the one a fresh inference returns."""
 
 from __future__ import annotations
 
 import json
 import os
+import threading
 import uuid
 
 import numpy as np
@@ -41,6 +42,23 @@ def _jobs(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _round_trips(spark, fn, monkeypatch) -> int:
+    """py4j commands ``fn`` sends from this thread (py4j's finalizer
+    thread releases dropped objects on its own schedule)."""
+    client = spark._jvm._gateway_client
+    real, me, sent = client.send_command, threading.get_ident(), []
+
+    def counted(command, *args, **kwargs):
+        if threading.get_ident() == me:
+            sent.append(command)
+        return real(command, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(client, "send_command", counted)
+        fn()
+    return len(sent)
+
+
 def _cached_equals_fresh(spark, path: str):
     """Read ``path`` twice through the cache (the second read must be a
     hit: no job) and return its schema next to a fresh inference."""
@@ -72,6 +90,57 @@ def test_warm_read_published_runs_no_job(spark, tmp_path):
     read_published(spark, root, "fact")
     assert _jobs(spark, lambda: read_published(spark, root, "fact")) == 0
     assert read_published(spark, root, "fact").count() == 10
+
+
+def test_warm_reads_stay_within_a_round_trip_budget(spark, sf_dir, tmp_path, monkeypatch):
+    """The parent commit made 97 py4j round trips per warm read_published
+    of a six-table snapshot (a package walk per Hadoop Path, a call per
+    listed table directory, a manifest parse, a re-resolved relation)
+    and 36 per warm catalog.table."""
+    root = str(tmp_path / "wh")
+    publish_tables({f"t{i}": spark.range(10 + i) for i in range(6)}, root)
+    budgets = {
+        "read_published": (lambda: read_published(spark, root, "t0"), 32),
+        "catalog.table": (lambda: catalog.table(spark, sf_dir, "customer"), 24),
+    }
+    for name, (read, budget) in budgets.items():
+        read()
+        assert _jobs(spark, read) == 0, name
+        assert _round_trips(spark, read, monkeypatch) <= budget, name
+    assert read_published(spark, root, "t5").count() == 15
+
+
+def test_self_join_of_published_reads_matches_fresh_reads(spark, tmp_path):
+    """Every read gets its own attribute ids: a self-join of a cold and
+    two warm reads of one table equals the join over fresh reads."""
+    root = str(tmp_path / "wh")
+    t = spark.range(6).select(F.col("id").alias("k"), (F.col("id") % 3).alias("g"))
+    publish_tables({"t": t}, root)
+    path = _rel(root, 1, "t")
+
+    def pairs(a, b):
+        return sorted(
+            a.join(b, a.g == b.g).select(a.k.alias("l"), b.k.alias("r")).collect()
+        )
+
+    cold, warm, warm2 = (read_published(spark, root, "t") for _ in range(3))
+    want = pairs(spark.read.parquet(path), spark.read.parquet(path))
+    assert len(want) == 12
+    assert pairs(cold, warm) == want
+    assert pairs(warm, warm2) == want
+
+
+def test_a_new_session_never_gets_another_sessions_relation(spark, tmp_path):
+    path = str(tmp_path / "d")
+    spark.range(3).write.parquet(path)
+    read_parquet(spark, path)
+    read_parquet(spark, path)
+    other = spark.newSession()
+    for df in (read_parquet(other, path), read_parquet(other, path)):
+        owner = df._jdf.queryExecution().analyzed().relation().sparkSession()
+        assert owner.equals(other._jsparkSession)
+        assert not owner.equals(spark._jsparkSession)
+        assert df.count() == 3
 
 
 def test_ntz_written_columns(spark, tmp_path):

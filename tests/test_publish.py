@@ -849,3 +849,67 @@ def test_manifest_resolved_once_per_call(spark, tmp_path, monkeypatch):
     assert v == 2 and calls == {"list": 2, "read": 1}
     with open(os.path.join(root, "_MANIFEST.v00000002.json")) as f:
         assert json.load(f)["parent"] == 1
+
+
+def test_partitioned_table_republishes(spark, tmp_path):
+    """A partition column reads back with the type Spark infers from the
+    directory names (bigint ``id % 2`` comes back as int); the schema gate
+    compares it against the new frame's own type, so the same partitioned
+    frame publishes twice. Retyping another column or dropping the
+    partition column is still refused."""
+    root = str(tmp_path / "wh")
+    fact = spark.range(4).withColumn("shard", F.col("id") % 2)
+    parts = {"fact": ["shard"]}
+    assert publish_tables({"fact": fact}, root, partition_by=parts) == 1
+    assert publish_tables({"fact": fact}, root, partition_by=parts) == 2
+    assert read_published(spark, root, "fact").count() == 4
+    with pytest.raises(SchemaEvolutionError, match="'id' retyped bigint -> string"):
+        publish_tables(
+            {"fact": fact.withColumn("id", F.col("id").cast("string"))},
+            root,
+            partition_by=parts,
+        )
+    with pytest.raises(SchemaEvolutionError, match="'shard' dropped"):
+        publish_tables({"fact": fact.drop("shard")}, root)
+
+
+def test_committed_manifest_parsed_once(spark, tmp_path, monkeypatch):
+    """Warm reads, latest or pinned, open no manifest: each committed
+    manifest is parsed once per (root, version)."""
+    from bbt_etl_dw_spark.sources import publish as pub
+
+    root = str(tmp_path / "wh")
+    publish_tables(_snap(spark, "a"), root)
+    opened = []
+    hadoop_path = pub._hadoop_path
+
+    def recorded(spark, path):
+        opened.append(path)
+        return hadoop_path(spark, path)
+
+    monkeypatch.setattr(pub, "_hadoop_path", recorded)
+    for _ in range(3):
+        assert read_published(spark, root, "fact").count() == 5
+        assert read_published(spark, root, "dim", version=1).count() == 2
+    assert [p for p in opened if "_MANIFEST" in p] == [
+        f"{root}/_MANIFEST.v00000001.json"
+    ]
+
+
+def test_gcd_version_raises_after_it_was_read(spark, tmp_path):
+    """A kept manifest is served only while a listing still shows it: a
+    version read before gc removed it raises as one never read."""
+    from py4j.protocol import Py4JJavaError
+
+    from bbt_etl_dw_spark.sources.publish import rollback_published
+
+    root = str(tmp_path / "wh")
+    publish_tables(_snap(spark, "a"), root)
+    publish_tables(_snap(spark, "b"), root)
+    assert {r.src for r in read_published(spark, root, "fact", version=1).collect()} == {"a"}
+    gc_published(spark, root, keep_last=1, min_age_seconds=0)
+    with pytest.raises(Py4JJavaError, match="FileNotFoundException"):
+        read_published(spark, root, "fact", version=1)
+    with pytest.raises(FileNotFoundError, match="does not exist"):
+        rollback_published(spark, root, 1)
+    assert {r.src for r in read_published(spark, root, "fact").collect()} == {"b"}

@@ -9,6 +9,10 @@ These pin, as tests, properties the round reviews verify by hand:
 - NO ``.rdd`` access — a DataFrame→RDD conversion silently leaves
   Tungsten (deserializes every row) and breaks AQE; VERDICT r08 #5
   removed the last one (``traversal.py``'s empty check).
+- NO ``_jvm.<package>.`` attribute walks outside ``bbt_etl_dw_spark/jvm.py``
+  — every dotted segment is a py4j round trip, and each package segment
+  makes the JVM scan the whole classpath with ``Class.forName`` first;
+  ``jvm.jvm_class`` resolves a class once per gateway.
 
 A legitimate future exception should be added to the explicit allowlist
 here WITH its justification, so the default stays "the build fails".
@@ -54,4 +58,19 @@ def test_no_dataframe_rdd_access():
     assert not hits, (
         "DataFrame.rdd access found (leaves Tungsten/codegen; use the "
         f"DataFrame API): {hits}"
+    )
+
+
+def test_jvm_classes_go_through_the_class_handle():
+    helper = os.path.join(PKG, "jvm.py")
+    hits = []
+    for path, src in _sources().items():
+        if path == helper:
+            continue
+        for m in re.finditer(r"(?<![A-Za-z0-9])_?jvm\.[a-z][\w$]*\.", src):
+            line = src[: m.start()].count("\n") + 1
+            hits.append(f"{path}:{line}")
+    assert not hits, (
+        "JVM package walk found (one py4j round trip and one classpath "
+        f"scan per package segment; use jvm.jvm_class): {hits}"
     )

@@ -16,10 +16,15 @@ because populating it was manual. This tool computes it from evidence:
    has changed since the driver last saw it: its evidence is stale
    regardless of recency, so it belongs in the force-recheck set.
 
-Writes FORCE_RECHECK.json {query: changed-fields} at the repo root —
-``bbt_etl_dw_spark.suite`` loads it as ``_FORCE_RECHECK``, sorting those
-queries as never-verified in the driver window. Re-run after any round
-that edits live operator code; commit the JSON with WINDOW_r{N}.txt.
+Writes FORCE_RECHECK.json {query: reason} at the repo root, the reason
+being "changed since rNN: <fields>; forced since <UTC time>" —
+``bbt_etl_dw_spark.suite`` loads it as ``_FORCE_RECHECK`` and sorts those
+queries right after the never-verified ones in the driver window,
+longest-forced first. The forced-since mark of a query already in the
+file is carried forward; one without a mark gets the commit time of the
+oldest FORCE_RECHECK.json in the unbroken run of committed versions that
+list it; a newly forced query gets the time of this run. Re-run after any
+round that edits live operator code; commit the JSON with WINDOW_r{N}.txt.
 
 Usage: python tools/emit_force_recheck.py
 """
@@ -32,6 +37,7 @@ import re
 import subprocess
 import sys
 import tempfile
+from datetime import datetime, timezone
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -54,6 +60,32 @@ def _round_commits() -> dict[int, str]:
     return commits
 
 
+def _utc(when: datetime) -> str:
+    return when.astimezone(timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ")
+
+
+def _forced_since_in_history(names: set[str]) -> dict[str, str]:
+    """Commit time of the oldest committed FORCE_RECHECK.json in the
+    unbroken run, newest first, of versions that list each name."""
+    log = _run("git", "log", "--format=%H %cI", "--", "FORCE_RECHECK.json")
+    since: dict[str, str] = {}
+    pending = set(names)
+    for line in log.splitlines():
+        if not pending:
+            break
+        sha, when = line.split()
+        try:
+            listed = json.loads(_run("git", "show", f"{sha}:FORCE_RECHECK.json"))
+        except (subprocess.CalledProcessError, json.JSONDecodeError):
+            listed = {}  # deleted or unreadable at that commit: the run ends
+        for name in list(pending):
+            if name in listed:
+                since[name] = _utc(datetime.fromisoformat(when))
+            else:
+                pending.discard(name)
+    return since
+
+
 def _fingerprints_at(tree_root: str) -> dict[str, dict[str, str]]:
     out = subprocess.run(
         [sys.executable, os.path.join(REPO, "tools", "_query_fingerprints.py"), tree_root],
@@ -65,9 +97,11 @@ def _fingerprints_at(tree_root: str) -> dict[str, dict[str, str]]:
 
 
 def main() -> None:
-    from bbt_etl_dw_spark.suite import _last_verified_round
+    from bbt_etl_dw_spark.suite import _last_verified_round, _load_force_recheck, forced_since
 
     latest = _last_verified_round()
+    previous = {n: forced_since(why) for n, why in _load_force_recheck().items()}
+    now = _utc(datetime.now(timezone.utc))
     commits = _round_commits()
     head = _fingerprints_at(REPO)
 
@@ -101,6 +135,13 @@ def main() -> None:
             diff = [k for k in ("impl", "oracle") if head[name][k] != old[name][k]]
             if diff:
                 force[name] = f"changed since r{rnd:02d}: {','.join(diff)}"
+
+    history = _forced_since_in_history(
+        {n for n in force if n in previous and not previous[n]}
+    )
+    for name in force:
+        since = previous.get(name) or history.get(name) or now
+        force[name] += f"; forced since {since}"
 
     out_path = os.path.join(REPO, "FORCE_RECHECK.json")
     with open(out_path, "w") as f:
