@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from bbt_etl_dw_spark.operators.ckpt import lazy_materialize, materialize
 from bbt_etl_dw_spark.operators.textstats import bind_once, md5_fingerprint, shingles
 
 
@@ -266,8 +267,8 @@ def jaccard_verify(
     # the pair list is small (that is the point of LSH); materialize it
     # once so the upstream candidate pipeline (signatures + bucket join)
     # is not re-executed for each of its three uses below (reliable
-    # checkpoint when a checkpoint dir is configured — see _ckpt)
-    candidates = _ckpt(candidates, None)
+    # checkpoint when a checkpoint dir is configured — see operators/ckpt.py)
+    candidates = materialize(candidates)
     cand_ids = candidates.select(
         F.explode(F.array("id_a", "id_b")).alias("doc_id")
     ).distinct()
@@ -301,7 +302,7 @@ def jaccard_verify(
     # parquet scans of documents, two LeftSemi joins). One checkpoint of
     # the candidate-pruned (doc_id, shingle-array) rows — O(candidates)
     # by the semi-join — halves the operator's dominant CPU.
-    sh = _ckpt(sh, None)
+    sh = materialize(sh)
     out = (
         candidates.join(sh.withColumnsRenamed({"doc_id": "id_a", "sh": "sh_a"}), "id_a")
         .join(sh.withColumnsRenamed({"doc_id": "id_b", "sh": "sh_b"}), "id_b")
@@ -379,7 +380,7 @@ def ngram_jaccard_pairs(
     # guard's hot-shingle aggregate (or, with the guard disabled, the
     # pair join itself) materializes the blocks in the same job (r15) —
     # the eager form paid a separate ckpt-write job per execution.
-    sh = _lazy_ckpt(sh, None)
+    sh = lazy_materialize(sh)
     if max_shingle_df_guard is not None:
         # The violator set is BROADCAST (r14 plan audit): left as a plain
         # left join, Catalyst picked a sort-merge join keyed on the
@@ -503,7 +504,7 @@ def collapsed_jaccard_edges(
     # the same grain the minhash corpus index persists. Lazy: the first
     # consumer (the shingle-index materialization, whose reps side
     # anti-joins it) writes the blocks inside its own job.
-    members = _lazy_ckpt(members.select("doc_id", "_rep"), None)
+    members = lazy_materialize(members.select("doc_id", "_rep"))
     intra = members.select(
         F.col("_rep").alias("id_a"),
         F.col("doc_id").alias("id_b"),
@@ -532,37 +533,6 @@ def minhash_dedup_pairs(
     return jaccard_verify(df, cands, id_col, text_col, shingle_k, threshold)
 
 
-
-def _ckpt(df: DataFrame, reliable: bool | None) -> DataFrame:
-    """Per-round lineage truncation for iterative plans. ``reliable=None``
-    (the default throughout this module) AUTO-SELECTS: reliable
-    checkpoint() into the session's checkpoint dir when one is configured
-    (HDFS/S3 on a real cluster — survives executor loss, which
-    localCheckpoint's executor-local blocks do not), localCheckpoint
-    otherwise (zero-config, right for local/tests). Explicit True/False
-    override. See operators/ckpt.py for the full contract."""
-    from bbt_etl_dw_spark.operators.ckpt import materialize
-
-    return materialize(df, reliable)
-
-
-def _lazy_ckpt(df: DataFrame, reliable: bool | None) -> DataFrame:
-    """Lineage truncation whose materialization MERGES into the next
-    action: on the local path the checkpoint is taken lazily, so the
-    consumer right after it (a guard aggregate, an edge count, a
-    convergence probe) both writes the blocks and computes its result in
-    ONE driver job instead of two (r14 dedup_clusters round trick,
-    generalized in r15). The reliable path stays EAGER — a lazy reliable
-    checkpoint recomputes its input a second time for the checkpoint
-    file write, the wrong trade on a real cluster."""
-    if reliable is False or (
-        reliable is None
-        and df.sparkSession.sparkContext.getCheckpointDir() is None
-    ):
-        return df.localCheckpoint(eager=False)
-    return _ckpt(df, reliable)
-
-
 def _star_components(
     edges: DataFrame, max_rounds: int = 40, reliable_checkpoint: bool | None = None
 ) -> DataFrame:
@@ -586,8 +556,8 @@ def _star_components(
     star-forest shape of the result is asserted outright."""
     # Lazy per-round truncation throughout (local path): the convergence
     # count right after each round materializes that round's blocks in
-    # the same job (r15; same contract as dedup_clusters' round_ckpt).
-    cur = _lazy_ckpt(edges, reliable_checkpoint)
+    # the same job (r15; same contract as dedup_clusters' label rounds).
+    cur = lazy_materialize(edges, reliable_checkpoint)
     stable = False
     for _ in range(max_rounds):
         def nbhd_min(nbr: DataFrame) -> DataFrame:
@@ -611,7 +581,7 @@ def _star_components(
             .filter(F.col("src") != F.col("dst"))
             .distinct()
         )
-        sym_large = _lazy_ckpt(sym_large, reliable_checkpoint)
+        sym_large = lazy_materialize(sym_large, reliable_checkpoint)
         # small-star: (v, m(u)) for each neighbor v <= u, plus (u, m(u))
         smin = nbhd_min(sym_large)
         small = (
@@ -629,7 +599,7 @@ def _star_components(
                 nxt.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
             ).distinct()
         )
-        sym_nxt = _lazy_ckpt(sym_nxt, reliable_checkpoint)
+        sym_nxt = lazy_materialize(sym_nxt, reliable_checkpoint)
         # converged when the (distinct, symmetric) edge set is unchanged
         if (
             sym_nxt.count() == cur.count()
@@ -740,7 +710,7 @@ def incremental_minhash_pairs(
     # to assert the O(batch) never-rereads-corpus-text property (a
     # checkpointed plan reads an RDD and reports no input files).
     if materialize_index:
-        allx = _ckpt(allx, None)
+        allx = materialize(allx)
     keys = allx.select("doc_id", "is_new", F.explode("bands").alias("bk")).select(
         "doc_id", "is_new", F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket")
     )
@@ -794,15 +764,6 @@ def incremental_minhash_dedup(
     return batch.join(victims, id_col, "left_anti")
 
 
-# Scale counters from the most recent dedup_clusters run in this process:
-# {"n_edges": directed-edge count after symmetrization/dedup, "rounds":
-# propagation rounds executed, "star_fallback": bool}. The wall time of a
-# clustering run is output-driven (edges), not input-driven (docs), so
-# scale probes should report wall/edges — these counters make that ratio
-# computable from committed artifacts (VERDICT r04 #4).
-LAST_CLUSTER_STATS: dict = {}
-
-
 def dedup_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -848,25 +809,19 @@ def dedup_clusters(
     # doc_dedup_clusters steady-state ~5.1-5.4 s checkpointed vs
     # ~5.6-7.0 s persisted). Truncated lineage also drops the plan-size
     # growth risk for deep iteration counts outright.
-    # LAZY on the local path (r15): the scale-counter count right below
-    # materializes the blocks — one job runs the whole pair pipeline AND
-    # counts it, where the eager form paid a separate checkpoint job.
-    edges = _lazy_ckpt(
+    # LAZY on the local path: the first convergence job below writes the
+    # blocks while it runs the whole pair pipeline, where the eager form
+    # paid a separate checkpoint job. Per-round shuffle widths are left
+    # to the session default + AQE coalescing: an experiment sizing them
+    # explicitly from the edge count (repartition(parts) per round)
+    # measured NO win — the per-round constant is driver-side planning
+    # and codegen compilation, which AQE-coalesced 32-task stages don't
+    # add to.
+    edges = lazy_materialize(
         e.unionByName(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         ).distinct(),
         reliable_checkpoint,
-    )
-    # One count feeds the scale counters (and materializes the lazy
-    # checkpoint). Per-round shuffle widths are left to the
-    # session default + AQE coalescing: an experiment sizing them
-    # explicitly from n_edges (repartition(parts) per round) measured NO
-    # win — the per-round constant is driver-side planning and codegen
-    # compilation, which AQE-coalesced 32-task stages don't add to.
-    n_edges = edges.count()
-    LAST_CLUSTER_STATS.clear()
-    LAST_CLUSTER_STATS.update(
-        {"n_edges": n_edges, "rounds": 0, "star_fallback": False}
     )
     labels = (
         edges.select(F.col("src").alias("node"))
@@ -883,10 +838,7 @@ def dedup_clusters(
     # edges). The reliable-checkpoint path stays EAGER: a lazy reliable
     # checkpoint recomputes its input a second time for the checkpoint
     # file write, which is the wrong trade on a real cluster.
-    def round_ckpt(df: DataFrame) -> DataFrame:
-        return _lazy_ckpt(df, reliable_checkpoint)
-
-    labels = round_ckpt(labels)
+    labels = lazy_materialize(labels, reliable_checkpoint)
 
     # Convergence certificate: per-node labels are MONOTONE NON-INCREASING
     # (each round's label is the min over a set containing the old label),
@@ -915,13 +867,13 @@ def dedup_clusters(
 
     prev_sum = label_sum(labels) if numeric_ids else None
     changed = True
-    for _round in range(max_iters):
-        LAST_CLUSTER_STATS["rounds"] = _round + 1
+    for _ in range(max_iters):
         nbr = edges.join(
             labels.withColumnRenamed("node", "dst"), "dst"
         ).select(F.col("src").alias("node"), "label")
-        new_labels = round_ckpt(
-            labels.unionByName(nbr).groupBy("node").agg(F.min("label").alias("label"))
+        new_labels = lazy_materialize(
+            labels.unionByName(nbr).groupBy("node").agg(F.min("label").alias("label")),
+            reliable_checkpoint,
         )
         if numeric_ids:
             new_sum = label_sum(new_labels)
@@ -938,9 +890,8 @@ def dedup_clusters(
         # several. Degrade to the diameter-independent algorithm (or
         # raise, if the caller opted out of the fallback).
         if star_fallback:
-            LAST_CLUSTER_STATS["star_fallback"] = True
             out = _star_components(edges, reliable_checkpoint=reliable_checkpoint)
-            return _ckpt(
+            return materialize(
                 out.select(F.col("doc_id"), F.col("cluster_id")),
                 reliable_checkpoint,
             )
@@ -1162,7 +1113,7 @@ def cosine_near_dups(
     # the operator's dominant map CPU) feed BOTH self-join sides: one
     # checkpoint of the skinny (id, tbl, bucket) rows computes them once
     # (r14 plan audit, same class as ngram_jaccard_pairs' shingle index)
-    sigs = _ckpt(sigs, None)
+    sigs = materialize(sigs)
     a, b = sigs.alias("a"), sigs.alias("b")
     pairs = (
         a.join(
@@ -1183,7 +1134,7 @@ def cosine_near_dups(
     # to candidate members BEFORE attaching vectors — the verify joins
     # below otherwise shuffle the full corpus embeddings twice
     # (jaccard_verify's shape, applied here)
-    pairs = _ckpt(pairs, None)
+    pairs = materialize(pairs)
     from bbt_etl_dw_spark.operators.guards import assert_broadcastable
 
     cand_ids = assert_broadcastable(
@@ -1198,9 +1149,7 @@ def cosine_near_dups(
     normed = df.select(F.col(id_col).alias("_id"), v.alias("_v")).withColumn(
         "_nrm", norm_expr(F.col("_v"))
     )
-    normed = _ckpt(
-        normed.join(F.broadcast(cand_ids), "_id", "left_semi"), None
-    )
+    normed = materialize(normed.join(F.broadcast(cand_ids), "_id", "left_semi"))
     cand = pairs.join(
         normed.select(
             F.col("_id").alias("id_a"), F.col("_v").alias("va"), F.col("_nrm").alias("na")
@@ -1264,7 +1213,7 @@ def prefix_jaccard_candidates(
     # one shingle pass feeds the global-df aggregate AND the rank join
     # (same class as ngram_jaccard_pairs: un-materialized, the corpus
     # scan + the lambda-heavy shingle transform run once per reference)
-    sh = _ckpt(sh, None)
+    sh = materialize(sh)
     gdf = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("gdf"))
     w = Window.partitionBy("doc_id").orderBy("gdf", "sh")
     num, den = int(threshold_num), int(threshold_den)
@@ -1279,7 +1228,7 @@ def prefix_jaccard_candidates(
     )
     # the prefix index (rarest-first rank join + window) feeds both
     # self-join sides — materialize once
-    prefix = _ckpt(prefix, None)
+    prefix = materialize(prefix)
     a, b = prefix.alias("a"), prefix.alias("b")
     size_ok = F.lit(den) * F.least(F.col("a.n"), F.col("b.n")) >= F.lit(
         num

@@ -27,14 +27,13 @@ For heavily skewed columns, pre-transform (e.g. log-bucket) before calling
 portable across engines.
 
 Relationship to ``sources/compact.py``: ``compact_zorder`` there is the
-FILE-SIZING entry point (two columns, caller-known bounds, magic-number
-bit spread — fewer expression nodes, target-file-MB sizing) used inside
-lake compaction jobs. This module is the general operator: k columns,
-bounds inferred from the data, explicit NULL policy, row-group-size
-control, and an SQL-replayable key layout (bit i of column j at position
-``i*k + j``) — which is what the ``events_zorder_keys`` oracle checks.
-The two produce equivalently-clustered layouts (different curve
-orientation); pick by entry point, not by curve.
+FILE-SIZING entry point used inside lake compaction jobs — it chooses the
+file count from the table's bytes and target-file-MB, then calls
+:func:`write_zordered` here. This module is the package's one Morton
+encoder: k columns, bounds inferred from the data, explicit NULL/NaN
+policy, row-group-size control, and an SQL-replayable key layout (bit i
+of column j at position ``i*k + j``) — which is what the
+``events_zorder_keys`` oracle checks.
 """
 
 from __future__ import annotations

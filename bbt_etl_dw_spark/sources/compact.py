@@ -125,53 +125,10 @@ def _on_disk_bytes(spark: SparkSession, src: str) -> int:
 
 
 # --- Z-order clustering (multi-column data skipping) ----------------------
-# This is the file-sizing COMPACTION entry point: two columns, bounds from
-# one min/max agg, magic-number bit spread (O(log bits) expression nodes).
-# The general operator — k columns, NULL policy, row-group sizing, and the
-# SQL-replayable key layout the events_zorder_keys oracle verifies — is
-# operators/zorder.py; both produce equivalently-clustered layouts.
-
-
-def _spread_bits_16(x):
-    """Spread a 16-bit value's bits to the even positions of a 32-bit
-    lane (classic Morton magic-number sequence) — pure bitwise column
-    expressions, whole-stage-codegen'd."""
-    from pyspark.sql import functions as F
-
-    x = x.bitwiseOR(F.shiftleft(x, 8)).bitwiseAND(F.lit(0x00FF00FF))
-    x = x.bitwiseOR(F.shiftleft(x, 4)).bitwiseAND(F.lit(0x0F0F0F0F))
-    x = x.bitwiseOR(F.shiftleft(x, 2)).bitwiseAND(F.lit(0x33333333))
-    x = x.bitwiseOR(F.shiftleft(x, 1)).bitwiseAND(F.lit(0x55555555))
-    return x
-
-
-def zorder_key(col_a, lo_a, hi_a, col_b, lo_b, hi_b, bits: int = 16):
-    """Morton (Z-order) key interleaving two numeric columns, each
-    rank-normalized to ``bits`` bits over its [lo, hi] range.
-
-    Sorting by this key clusters rows so that parquet min/max statistics
-    become selective on BOTH columns at once — a file holds a small
-    rectangle of the (a, b) plane instead of a thin full-height stripe
-    (what a linear sort gives the secondary column). The [lo, hi] bounds
-    come from one cheap min/max aggregate; a narrow map computes the key.
-    No shuffle here — the caller range-partitions on the key."""
-    from pyspark.sql import functions as F
-
-    n = F.lit((1 << bits) - 1)
-
-    def norm(c, lo, hi):
-        # guard ONLY the degenerate hi == lo case: clamping every span up
-        # to 1 collapsed sub-unit ranges (e.g. rates in [0, 1e-6]) to a
-        # constant key — one giant file, clustering defeated (review
-        # finding)
-        raw_span = float(hi) - float(lo)
-        span = F.lit(raw_span if raw_span != 0 else 1.0).cast("double")
-        scaled = ((c.cast("double") - F.lit(lo)) / span) * n.cast("double")
-        return F.least(F.greatest(F.floor(scaled).cast("long"), F.lit(0)), n)
-
-    a = _spread_bits_16(norm(col_a, lo_a, hi_a))
-    b = _spread_bits_16(norm(col_b, lo_b, hi_b))
-    return F.shiftleft(a, 1).bitwiseOR(b)
+# The FILE-SIZING compaction entry point: it picks the file count the way
+# compact_to_target does and hands the layout to operators/zorder.py, the
+# one Morton encoder (k columns, NULL/NaN policy, the SQL-replayable key
+# layout the events_zorder_keys oracle verifies).
 
 
 def compact_zorder(
@@ -191,29 +148,16 @@ def compact_zorder(
     prune most files via footer statistics (the poor man's multi-column
     clustering index; see tests/test_sources.py for the measured span
     contraction vs a linear sort). One min/max aggregate + one range
-    shuffle; the key column is dropped before write."""
-    from pyspark.sql import functions as F
+    shuffle; the key column is dropped before write. Rows with a NULL
+    (or NaN) key column cluster together ahead of every other row; an
+    all-NULL key column raises ``ValueError``
+    (:func:`~bbt_etl_dw_spark.operators.zorder.zorder_key`)."""
+    from bbt_etl_dw_spark.operators.zorder import write_zordered
 
-    ca, cb = cols
-    bounds = df.agg(
-        F.min(ca).alias("la"), F.max(ca).alias("ha"),
-        F.min(cb).alias("lb"), F.max(cb).alias("hb"),
-    ).collect()[0]
     if total_bytes is None:
         total_bytes = df.count() * estimate_row_bytes(df) / parquet_ratio
     n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-    key = zorder_key(
-        F.col(ca), bounds["la"], bounds["ha"],
-        F.col(cb), bounds["lb"], bounds["hb"],
-        bits=bits,
-    )
-    out = (
-        df.withColumn("__zkey", key)
-        .repartitionByRange(n_files, "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey")
-    )
-    out.write.mode("overwrite").parquet(path)
+    write_zordered(df, path, list(cols), bits=bits, num_files=n_files)
     return n_files
 
 

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bbt_etl_dw_spark.jvm import jvm_class
+from bbt_etl_dw_spark.sources.parquet import _hadoop_fs
 
 MANIFEST_NAME = "_shard_manifest.json"
 
@@ -59,15 +60,14 @@ def _row_checksum(cols: list[str]):
     return F.sum(F.xxhash64(*encoded).cast("decimal(38,0)")).alias("checksum")
 
 
-def _manifest_path(spark: SparkSession, path: str):
-    return jvm_class(spark, "org.apache.hadoop.fs.Path")(
-        f"{path.rstrip('/')}/{MANIFEST_NAME}"
-    )
+def _manifest_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) of ``path``'s manifest."""
+    fs, jpath, _ = _hadoop_fs(spark, f"{path.rstrip('/')}/{MANIFEST_NAME}")
+    return fs, jpath
 
 
 def _write_manifest(spark: SparkSession, path: str, manifest: dict) -> None:
-    jpath = _manifest_path(spark, path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = _manifest_fs(spark, path)
     out = fs.create(jpath, True)
     try:
         out.write(json.dumps(manifest, indent=1, sort_keys=True).encode())
@@ -76,22 +76,15 @@ def _write_manifest(spark: SparkSession, path: str, manifest: dict) -> None:
 
 
 def _read_manifest(spark: SparkSession, path: str) -> dict:
-    jpath = _manifest_path(spark, path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    # plain-JDK line reader: no extra classpath dependency
-    reader = jvm_class(spark, "java.io.BufferedReader")(
-        jvm_class(spark, "java.io.InputStreamReader")(fs.open(jpath), "UTF-8")
-    )
-    lines = []
+    fs, jpath = _manifest_fs(spark, path)
+    stream = fs.open(jpath)
     try:
-        while True:
-            line = reader.readLine()
-            if line is None:
-                break
-            lines.append(line)
+        # the JVM drains the stream (as sources.publish reads manifests):
+        # py4j passes byte[] buffers by value
+        text = jvm_class(spark, "org.apache.commons.io.IOUtils").toString(stream, "UTF-8")
     finally:
-        reader.close()
-    return json.loads("\n".join(lines))
+        stream.close()
+    return json.loads(text)
 
 
 def _per_shard_stats(

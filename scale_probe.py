@@ -22,7 +22,7 @@ dedup family a realistic high-duplicate-density corpus (each document gains
 9 exact duplicates — the web-crawl shape exact/near dedup exists for).
 
 The generated directory is gitignored (datasets don't belong in git); the
-probe numbers and cliff analysis are recorded in PROGRESS.md.
+per-scale bench details land in BENCH_sf1_<tag>.json.
 """
 
 from __future__ import annotations
@@ -95,147 +95,15 @@ def generate() -> None:
         print(f"{t}: x{COPIES} -> {n} rows")
 
 
-def _dedup_cluster_scale() -> dict:
-    """Edge/round counters for doc_dedup_clusters at sf0.1 and synthetic
-    sf1 (VERDICT r04 #4). The clustering wall is output-driven: the sf1
-    generator keeps text byte-identical across replicas, so every doc
-    gains 9 exact duplicates and the pair/edge set grows ~100x while rows
-    grow 10x. wall/edges (computable from this artifact + the bench JSON)
-    is the honest scale ratio; wall alone reads as superlinear."""
-    import time
-
-    from bbt_etl_dw_spark.operators import dedup
-    from bbt_etl_dw_spark.session import get_spark
-    from bbt_etl_dw_spark.suite import load_all
-
-    spark = get_spark(app_name="scale-probe-dedup-stats")
-    spark.sparkContext.setLogLevel("ERROR")
-    builder = load_all()["doc_dedup_clusters"].builder
-    out = {}
-    for label, sf_dir in (("sf0.1", SRC), ("sf1", DST)):
-        t0 = time.perf_counter()
-        builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        wall = round(time.perf_counter() - t0, 2)
-        stats = dict(dedup.LAST_CLUSTER_STATS)
-        stats["wall_s"] = wall
-        stats["wall_us_per_edge"] = round(1e6 * wall / max(stats["n_edges"], 1), 2)
-        out[label] = stats
-
-    # Third point, ~5M directed edges (VERDICT r05 #6: two points have no
-    # slope): a synthetic pair list fed straight to dedup_clusters — full
-    # sf3 tables are unnecessary because clustering cost is edge-driven.
-    # Shape matches the sf1 corpus (clique-of-10 duplicate groups: each
-    # doc + 9 byte-identical replicas), so the three points differ only
-    # in scale: 55k groups x C(10,2)=45 pairs = 2.475M undirected edges,
-    # ~4.95M after symmetrization.
-    from pyspark.sql import functions as F
-
-    n_groups = 55_000
-    combos = F.expr(
-        "flatten(transform(sequence(0, 8),"
-        " i -> transform(sequence(i + 1, 9), j -> struct(i AS i, j AS j))))"
-    )
-    pairs = (
-        spark.range(n_groups)
-        .select((F.col("id") * 10).alias("g"), F.explode(combos).alias("p"))
-        .select(
-            (F.col("g") + F.col("p.i")).alias("id_a"),
-            (F.col("g") + F.col("p.j")).alias("id_b"),
-        )
-        .repartition(32)
-        .persist()
-    )
-    pairs.count()  # materialize: time clustering, not pair generation
-    t0 = time.perf_counter()
-    dedup.dedup_clusters(pairs).write.format("noop").mode("overwrite").save()
-    wall = round(time.perf_counter() - t0, 2)
-    stats = dict(dedup.LAST_CLUSTER_STATS)
-    stats["wall_s"] = wall
-    stats["wall_us_per_edge"] = round(1e6 * wall / max(stats["n_edges"], 1), 2)
-    out["synthetic-5M-edges"] = stats
-    pairs.unpersist()
-    return out
-
-
-def _skew_probe() -> dict:
-    """Salted vs unsalted wall on a genuinely skewed join at sf1 (VERDICT
-    r04 #5). Shape: 6M-row fact with 60% of rows on ONE key (~130-byte
-    payload per row), joined to a 10k-row dim that is NOT broadcastable
-    (threshold -1 emulates the 100 GB dim this operator exists for),
-    followed by an aggregation on the SAME key — the case where AQE's
-    skew-join split does not rescue the plan, because the join output's
-    hash partitioning is reused by the downstream agg. Both variants run
-    under identical session confs (AQE on); reported walls are min-of-2
-    (warm)."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from bbt_etl_dw_spark.operators.skew import salted_join
-    from bbt_etl_dw_spark.session import get_spark
-
-    spark = get_spark(app_name="scale-probe-skew")
-    spark.sparkContext.setLogLevel("ERROR")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        li = spark.read.parquet(f"{DST}/lineitem.parquet")
-        fact = li.select(
-            F.when(
-                F.pmod(F.xxhash64("l_orderkey", "l_linenumber"), F.lit(10)) < 6,
-                F.lit(0),
-            )
-            .otherwise(F.col("l_suppkey"))
-            .alias("suppkey"),
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev"),
-            F.repeat(F.md5(F.col("l_orderkey").cast("string")), 4).alias("payload"),
-        ).persist()
-        n_rows = fact.count()
-        hot_rows = fact.filter(F.col("suppkey") == 0).count()
-        dim = (
-            fact.select("suppkey")
-            .distinct()
-            .withColumn("w", (F.col("suppkey") % 97) / 97.0)
-            .persist()
-        )
-        dim.count()
-
-        def agg(j):
-            return j.groupBy("suppkey").agg(
-                F.sum(F.col("rev") * F.col("w")).alias("x"),
-                F.sum(F.length("payload")).alias("pl"),
-            )
-
-        walls = {}
-        for name, join in (
-            ("unsalted", lambda: fact.join(dim, "suppkey")),
-            ("salted", lambda: salted_join(fact, dim, ["suppkey"], salt=32)),
-        ):
-            runs = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                agg(join()).write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            walls[name] = round(min(runs), 2)
-        fact.unpersist()
-        dim.unpersist()
-        return {
-            "fact_rows": n_rows,
-            "hot_key_rows": hot_rows,
-            "unsalted_wall_s": walls["unsalted"],
-            "salted_wall_s": walls["salted"],
-            "speedup_salted": round(walls["unsalted"] / walls["salted"], 2),
-        }
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def bench_sf1(tag: str) -> None:
     """Run bench.py at sf0.1 AND at the synthetic sf1 back-to-back (same
     machine state, so the per-query ratios isolate data-scale cost from
     ambient load) and write BENCH_sf1_{tag}.json. The 10x-data ratio per
     query is the actual scale signal a round-over-round diff should watch
-    — a query drifting toward 10x has lost its sublinearity."""
+    — a query drifting toward 10x has lost its sublinearity. Each scale's
+    whole BENCH_DETAIL.json is embedded (walls, noise band, warmups and
+    the tracer fields: build/exec jobs, stages, shuffle, spill, skew), so
+    BENCH_sf1_{tag} reads like two BENCH_DETAIL files side by side."""
     import json
     import subprocess
 
@@ -244,78 +112,40 @@ def bench_sf1(tag: str) -> None:
         generate()
 
     def run(sf_dir: str):
+        """(returncode, BENCH_DETAIL of this run or None). The committed
+        BENCH_DETAIL.json stays the sf0.1 one — restore it with git after
+        a scale run."""
         env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
         proc = subprocess.run(
-            [sys.executable, os.path.join(repo, "bench.py")],
-            capture_output=True,
-            text=True,
-            env=env,
-            cwd=repo,
+            [sys.executable, os.path.join(repo, "bench.py")], env=env, cwd=repo
         )
-        # VERDICT r12 stretch: the lean stdout line drops the noise
-        # diagnostics; lift them out of the BENCH_DETAIL.json this run
-        # just wrote so BENCH_sf1_{tag} carries noise_band +
-        # warmups_used per scale and next round's movers classify as
-        # noise/real from the artifact alone. (The committed
-        # BENCH_DETAIL.json stays the sf0.1 one — restore it with git
-        # after a scale run, as before.)
-        detail = None
-        try:
-            with open(os.path.join(repo, "BENCH_DETAIL.json")) as f:
-                d = json.load(f)
-            detail = {
-                k: d.get(k)
-                for k in (
-                    "noise_band",
-                    "spread",
-                    "warmups_used",
-                    "warmup_protocol",
-                    "runs_per_query",
-                )
-            }
-        except (OSError, json.JSONDecodeError):
-            pass
-        for line in reversed(proc.stdout.strip().splitlines()):
-            try:
-                return proc.returncode, json.loads(line), detail
-            except json.JSONDecodeError:
-                continue
-        return proc.returncode, None, detail
+        if proc.returncode != 0:
+            return proc.returncode, None  # bench.py writes the detail last
+        with open(os.path.join(repo, "BENCH_DETAIL.json")) as f:
+            return 0, json.load(f)
 
-    rc01, p01, det01 = run(SRC)
-    rc1, p1, det1 = run(DST)
+    rc01, d01 = run(SRC)
+    rc1, d1 = run(DST)
     ratios = None
-    if p01 and p1:
-        q01 = p01.get("queries", {})
+    if d01 and d1:
+        q01 = d01["queries"]
         ratios = {
-            q: round(t / q01[q], 2)
-            for q, t in p1.get("queries", {}).items()
-            if q01.get(q)
+            q: round(t / q01[q], 2) for q, t in d1["queries"].items() if q01.get(q)
         }
-        ratios["_total"] = round(p1["value"] / p01["value"], 2)
+        ratios["_total"] = round(d1["value"] / d01["value"], 2)
     out = {
         "rc": max(rc01, rc1),
         "sf": "sf1-synthetic (10x sf0.1, key-shifted replicas)",
-        "sf01_baseline": p01,
-        "parsed": p1,
         "ratio_sf1_vs_sf01": ratios,
-        "sf01_detail": det01,
-        "sf1_detail": det1,
-        # VERDICT r04 #4: the dedup-clustering wall is OUTPUT-driven (the
-        # synthetic sf1 corpus gives every doc 9 byte-identical replicas,
-        # ~100x the edge set), so the ratio-to-watch is wall/edges, not
-        # wall alone. Record edges + rounds at both scales so that claim
-        # is auditable from this artifact.
-        "dedup_cluster_scale": _dedup_cluster_scale(),
-        # VERDICT r04 #5: paired skewed-join probe, salted vs unsalted.
-        "skew_probe": _skew_probe(),
+        "sf01_detail": d01,
+        "sf1_detail": d1,
     }
     dst = os.path.join(repo, f"BENCH_sf1_{tag}.json")
     with open(dst, "w") as f:
         json.dump(out, f, indent=2)
     print(
-        f"wrote {dst}: sf0.1={p01 and p01.get('value')}s "
-        f"sf1={p1 and p1.get('value')}s ratio={ratios and ratios.get('_total')}"
+        f"wrote {dst}: sf0.1={d01 and d01['value']}s "
+        f"sf1={d1 and d1['value']}s ratio={ratios and ratios['_total']}"
     )
 
 

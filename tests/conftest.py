@@ -18,3 +18,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> (Spark jobs ``fn()`` ran, its result),
+    counted by job group on the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "count_jobs")
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+    return run

@@ -120,7 +120,7 @@ def test_incremental_semantic_dedup_cross_cluster_blindness(spark):
     assert [r["vec_id"] for r in out.collect()] == [2]  # survives: other cluster
 
 
-# --- checkpoint auto-selection (operators/ckpt.materialize) ----------------
+# --- checkpoint auto-selection (operators/ckpt) ---------------------------
 
 
 def _unset_checkpoint_dir(sc):
@@ -154,6 +154,31 @@ def test_materialize_auto_selects_reliable_with_checkpoint_dir(spark, tmp_path):
         # a reliable checkpoint writes files under the configured dir
         files = list((tmp_path / "ckpt").rglob("*"))
         assert files, "reliable checkpoint selected no files written"
+    finally:
+        _unset_checkpoint_dir(sc)
+
+
+def test_lazy_materialize_defers_local_and_checkpoints_reliable_eagerly(
+    spark, tmp_path, count_jobs
+):
+    """The lazy flavour: with no checkpoint dir the call runs no job (the
+    next action writes the local blocks); with one it checkpoints eagerly
+    to reliable files, since a lazy reliable checkpoint would recompute
+    its input for the file write."""
+    from bbt_etl_dw_spark.operators.ckpt import lazy_materialize
+
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    jobs, out = count_jobs(lambda: lazy_materialize(spark.range(10)))
+    assert jobs == 0
+    assert out.count() == 10
+
+    sc.setCheckpointDir(str(tmp_path / "lazy_ckpt"))
+    try:
+        jobs, rel = count_jobs(lambda: lazy_materialize(spark.range(10)))
+        assert jobs >= 1
+        assert list((tmp_path / "lazy_ckpt").rglob("part-*")), "no reliable files"
+        assert rel.count() == 10
     finally:
         _unset_checkpoint_dir(sc)
 

@@ -375,25 +375,16 @@ def test_zorder_clusters_both_dimensions(spark, tmp_path):
     assert zy < ly * 0.7
 
 
-def test_zorder_key_is_monotone_in_quadrants(spark):
-    """Sanity on the Morton bit interleave: the four quadrants of the
-    value plane map to the four quarters of the key range, in Z order."""
-    import pyspark.sql.functions as F
+def test_compact_zorder_all_null_column_raises(spark, tmp_path):
+    """An all-NULL key column has no range to scale: compact_zorder
+    refuses it by name instead of writing an unclustered layout."""
+    import pytest as _pytest
 
-    from bbt_etl_dw_spark.sources.compact import zorder_key
+    from bbt_etl_dw_spark.sources.compact import compact_zorder
 
-    pts = spark.createDataFrame(
-        [(0, 0), (0, 9), (9, 0), (9, 9)], ["a", "b"]
-    ).select(
-        "a", "b",
-        zorder_key(F.col("a"), 0, 9, F.col("b"), 0, 9, bits=2).alias("k"),
-    )
-    got = {(r["a"], r["b"]): r["k"] for r in pts.collect()}
-    # bits=2: values normalize to 0..3; a contributes odd bit positions.
-    assert got[(0, 0)] == 0
-    assert got[(0, 9)] == 0b0101  # b=3 spread to even bits
-    assert got[(9, 0)] == 0b1010  # a=3 spread to odd bits
-    assert got[(9, 9)] == 0b1111
+    df = spark.createDataFrame([(1, None), (2, None)], "x long, y double")
+    with _pytest.raises(ValueError, match="'y'"):
+        compact_zorder(df, str(tmp_path / "z"), ("x", "y"), total_bytes=1.0)
 
 
 def test_writable_session_catalog_partition_pruning(spark, sf_dir):

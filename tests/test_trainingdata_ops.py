@@ -531,7 +531,7 @@ def test_corpus_vocabulary_determinism(spark):
     assert rows == [("a", 2, 3), ("b", 2, 3)]
 
 
-def test_dedup_clusters_chain_and_clique(spark):
+def test_dedup_clusters_chain_and_clique(spark, count_jobs):
     from bbt_etl_dw_spark.operators.dedup import dedup_clusters
 
     # chain 1-2-3-4 (diameter 3: needs real propagation, not one hop),
@@ -540,7 +540,11 @@ def test_dedup_clusters_chain_and_clique(spark):
         [(1, 2), (2, 3), (3, 4), (10, 11), (10, 12), (11, 12), (20, 21)],
         "id_a long, id_b long",
     )
-    got = {(r.doc_id, r.cluster_id) for r in dedup_clusters(pairs).collect()}
+    # The call's eager jobs: the lazy edge checkpoint is written by the
+    # first convergence job, not by a count of its own (30 with one).
+    jobs, clusters = count_jobs(lambda: dedup_clusters(pairs))
+    assert jobs == 28
+    got = {(r.doc_id, r.cluster_id) for r in clusters.collect()}
     assert got == {
         (1, 1), (2, 1), (3, 1), (4, 1),
         (10, 10), (11, 10), (12, 10),

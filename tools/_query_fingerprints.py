@@ -25,14 +25,15 @@ The suite registration machinery (``register``/``QueryDef``/``load_all``)
 is excluded — it is harness plumbing that fails loudly at import, never a
 silent result change.
 
-Run against the CURRENT tree and against a historical commit's worktree;
-a query whose pair differs has changed since that commit and its driver
-evidence from then is stale.
+Run against the CURRENT tree and against a historical commit's extracted
+tree; a query whose pair differs has changed since that commit and its
+driver evidence from then is stale.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 import hashlib
 import json
 import os
@@ -70,6 +71,7 @@ def _strip_docstrings(tree: ast.AST) -> ast.AST:
     return tree
 
 
+@functools.cache
 def _normalize(src: str) -> str:
     """Canonical EXECUTABLE form of a source segment: parsed and
     unparsed (drops comments and formatting), docstrings stripped.
@@ -77,7 +79,7 @@ def _normalize(src: str) -> str:
     not invalidate driver evidence — the first raw-text fingerprints
     re-flagged whole cohorts after review rounds that only improved
     documentation. Non-parseable inputs (reexport markers) hash raw.
-    Applied identically to the HEAD tree and the historical worktree
+    Applied identically to the HEAD tree and the historical tree
     (emit_force_recheck always runs the CURRENT tool on both), so the
     comparison stays apples-to-apples."""
     try:
@@ -143,9 +145,13 @@ class _ModuleIndex:
 
 
 class _Resolver:
-    def __init__(self, root: str):
+    """Collects one query's transitive segments. ``indexes`` (module ->
+    parsed module) may be shared by every query of one tree, so a module
+    is parsed once per run, not once per query."""
+
+    def __init__(self, root: str, indexes: dict[str, _ModuleIndex] | None = None):
         self.root = root
-        self._idx: dict[str, _ModuleIndex] = {}
+        self._idx = {} if indexes is None else indexes
         # collected: (module, symbol) -> source segment; (module, None) ->
         # whole-file fallback
         self.collected: dict[tuple[str, str | None], str] = {}
@@ -156,7 +162,10 @@ class _Resolver:
         return self._idx[module]
 
     @staticmethod
-    def _names_and_attrs(src: str) -> tuple[set[str], set[tuple[str, str]]]:
+    @functools.cache
+    def _names_and_attrs(
+        src: str,
+    ) -> tuple[frozenset[str], frozenset[tuple[str, str]]]:
         names: set[str] = set()
         attrs: set[tuple[str, str]] = set()
         try:
@@ -164,23 +173,24 @@ class _Resolver:
         except SyntaxError:
             import re
 
-            return set(re.findall(r"[A-Za-z_]\w*", src)), set()
+            return frozenset(re.findall(r"[A-Za-z_]\w*", src)), frozenset()
         for n in ast.walk(tree):
             if isinstance(n, ast.Name):
                 names.add(n.id)
             elif isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name):
                 attrs.add((n.value.id, n.attr))
-        return names, attrs
+        return frozenset(names), frozenset(attrs)
 
     @staticmethod
-    def _inner_imports(src: str) -> list[tuple[str, str, str | None]]:
+    @functools.cache
+    def _inner_imports(src: str) -> tuple[tuple[str, str, str | None], ...]:
         """(bound name, module, symbol|None) for package imports INSIDE the
         function body (suite builders import operators lazily)."""
-        out = []
+        out: list[tuple[str, str, str | None]] = []
         try:
             tree = ast.parse(src)
         except SyntaxError:
-            return out
+            return ()
         for n in ast.walk(tree):
             if isinstance(n, ast.ImportFrom) and n.module and n.module.startswith(
                 "bbt_etl_dw_spark"
@@ -191,7 +201,7 @@ class _Resolver:
                 for a in n.names:
                     if a.name.startswith("bbt_etl_dw_spark"):
                         out.append((a.asname or a.name.split(".")[0], a.name, None))
-        return out
+        return tuple(out)
 
     def resolve_symbol(self, module: str, symbol: str) -> None:
         if (module, symbol) in _HARNESS_SYMBOLS:
@@ -274,6 +284,7 @@ def main() -> None:
     from bbt_etl_dw_spark.suite import load_all
 
     reg = load_all()
+    indexes: dict[str, _ModuleIndex] = {}
     out: dict[str, dict[str, str]] = {}
     for name, qd in reg.items():
         fn = qd.builder
@@ -281,7 +292,7 @@ def main() -> None:
             fn_src = textwrap.dedent(inspect.getsource(fn))
         except (OSError, TypeError):
             fn_src = ""
-        r = _Resolver(root)
+        r = _Resolver(root, indexes)
         r.expand(fn.__module__, fn_src)
         parts = [_normalize(fn_src)] + [
             f"{m}.{s}\n{_normalize(seg)}"

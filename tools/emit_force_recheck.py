@@ -11,7 +11,9 @@ because populating it was manual. This tool computes it from evidence:
 3. Per-query implementation fingerprints (tools/_query_fingerprints.py:
    builder source + every transitively referenced function/class/constant
    at SYMBOL granularity across modules + oracle SQL) are computed at
-   HEAD and at each evidence commit (via a throwaway git worktree).
+   HEAD and at each evidence commit (its tree extracted with
+   ``git archive`` into a temporary directory, so an interrupted run
+   leaves nothing registered in the repository).
 4. A query whose fingerprint differs from its evidence-commit fingerprint
    has changed since the driver last saw it: its evidence is stale
    regardless of recency, so it belongs in the force-recheck set.
@@ -121,12 +123,13 @@ def main() -> None:
         )
     rounds_needed = sorted(set(latest.values()))
     for rnd in rounds_needed:
-        with tempfile.TemporaryDirectory(prefix=f"fr_r{rnd}_") as wt:
-            _run("git", "worktree", "add", "--detach", wt, commits[rnd])
-            try:
-                old = _fingerprints_at(wt)
-            finally:
-                _run("git", "worktree", "remove", "--force", wt)
+        with tempfile.TemporaryDirectory(prefix=f"fr_r{rnd}_") as tree:
+            archive = subprocess.run(
+                ["git", "archive", commits[rnd]], cwd=REPO, check=True,
+                capture_output=True,
+            ).stdout
+            subprocess.run(["tar", "-x", "-C", tree], input=archive, check=True)
+            old = _fingerprints_at(tree)
         for name, ev_round in latest.items():
             if ev_round != rnd or name not in head:
                 continue
